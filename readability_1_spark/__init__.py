@@ -11,6 +11,9 @@ Architecture (SURVEY.md):
 * ``queries``: pipeline-level analytic operators with SQL oracles.
 """
 
+from . import _zipdir
 from .extract import extract_one  # noqa: F401
+
+_zipdir.install()
 
 __version__ = "0.1.0"

@@ -32,7 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kernel import OUT_SCHEMA_DDL, make_extraction_kernel, make_readerable_kernel
+from .kernel import OUT_SCHEMA_DDL, make_extraction_kernel
 
 # A cheap, pushdown-friendly gate for "this turn might carry an HTML
 # document".  Full validation (errorState etc.) happens in the kernel.
@@ -217,6 +217,14 @@ def lineage_rollup(extractions: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+# The checkpoint manifest's shape.  Reading it with this schema skips the
+# Spark job parquet runs to infer one from the file footers.
+CHECKPOINTS_DDL = (
+    "run_id STRING, batch_id STRING, part_id INT, rows_written BIGINT, "
+    "committed_at TIMESTAMP"
+)
+
+
 class Storage:
     """Iceberg writer with parquet-directory fallback (SURVEY.md §4.3)."""
 
@@ -243,8 +251,11 @@ class Storage:
         path = self._table_path(name)
         if not os.path.exists(path):
             return None
+        reader = self.spark.read
+        if name == "checkpoints":
+            reader = reader.schema(CHECKPOINTS_DDL)
         try:
-            return self.spark.read.parquet(path)
+            return reader.parquet(path)
         except Exception:
             return None
 
@@ -261,7 +272,10 @@ def run_extraction_job(
     """Checkpointed, idempotently-resumable extraction job.
 
     Run-batch commit protocol:
-      1. todo = all part_ids ∖ checkpointed part_ids (left-anti join)
+      1. todo = all part_ids ∖ checkpointed part_ids (left-anti join); an
+         empty todo returns at once with rows = 0 and writes nothing.  The
+         collected ids come back as a JVM-local frame (range ∩ todo), so
+         the semi-join and manifest below start no Python task
       2. extract only rows whose part_id ∈ todo and append them (run_id-
          partitioned) — the kernel runs exactly ONCE, with no persist() of
          the full output and no extra count() pass (at 10^12 turns caching
@@ -280,25 +294,32 @@ def run_extraction_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     gated = with_partitioning(gate_html_turns(transcripts), num_parts)
 
-    checkpoints = storage.read("checkpoints")
-    if checkpoints is not None:
-        done = checkpoints.filter(F.col("run_id") == run_id).select("part_id").distinct()
-        all_parts = gated.select("part_id").distinct()
-        todo_parts = all_parts.join(F.broadcast(done), "part_id", "left_anti")
-    else:
-        todo_parts = gated.select("part_id").distinct()
-    # Materialize the (<= num_parts rows) todo set once: it feeds both the
-    # semi-join build side and the manifest, and leaving it lazy would scan
-    # the gated input twice just to recompute the same tiny distinct.
-    todo_ids = [r.part_id for r in todo_parts.collect()]
-    todo_parts = spark.createDataFrame(
-        [(p,) for p in todo_ids], "part_id INT"
-    )
-
-    todo = gated.join(F.broadcast(todo_parts), "part_id", "left_semi")
     # batch_id identifies THIS invocation (a resumed run shares run_id but
     # must not re-read earlier batches' rows when deriving its lineage).
     batch_id = uuid.uuid4().hex[:12]
+
+    todo_parts = gated.select("part_id")
+    checkpoints = storage.read("checkpoints")
+    if checkpoints is not None:
+        # The broadcast build side dedups its keys; a distinct here would
+        # only add a shuffle stage.
+        done = checkpoints.filter(F.col("run_id") == run_id).select("part_id")
+        todo_parts = todo_parts.join(F.broadcast(done), "part_id", "left_anti")
+    # Materialize the (<= num_parts rows) todo set once: it feeds both the
+    # semi-join build side and the manifest, and leaving it lazy would scan
+    # the gated input twice just to recompute the same tiny distinct.
+    todo_ids = [r.part_id for r in todo_parts.distinct().collect()]
+    if not todo_ids:
+        return {"run_id": run_id, "batch_id": batch_id, "rows": 0}
+    # Built JVM-side: a driver-list createDataFrame is a Python RDD scan,
+    # and every job consuming it would run Python tasks to unpickle ints.
+    todo_parts = (
+        spark.range(num_parts)
+        .select(F.col("id").cast("int").alias("part_id"))
+        .filter(F.col("part_id").isin(todo_ids))
+    )
+
+    todo = gated.join(F.broadcast(todo_parts), "part_id", "left_semi")
     extractions = (
         extract_transcripts(
             todo, num_parts=num_parts, opts=opts, readerable_gate=readerable_gate,

@@ -117,3 +117,103 @@ def test_spark_submit_tokenize_job(tmp_path, spark):
     assert all(len(tids) == 64 for _s, tids in packed[:-1])
     # every id is inside the vocabulary (incl. EOS)
     assert max(flat) <= eos and min(flat) >= 0
+
+
+def _write_zip(path, modules):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, source in modules.items():
+            zf.writestr(name + ".py", source)
+
+
+def test_zip_invalidate_caches_skips_unchanged_archive(tmp_path, monkeypatch):
+    """Several zipimporters on one unchanged archive: invalidating every
+    import cache (what pyspark's worker does per task) re-reads nothing."""
+    import importlib
+    import zipimport
+
+    import readability_1_spark  # noqa: F401  (installs the stat gate)
+
+    archive = str(tmp_path / "pkgs.zip")
+    _write_zip(archive, {"r1s_zip_probe_a": "X = 1\n"})
+    for sub in ("", "a", "b/c"):
+        path = os.path.join(archive, sub) if sub else archive
+        monkeypatch.setitem(sys.path_importer_cache, path, zipimport.zipimporter(path))
+    reads = []
+    orig = zipimport._read_directory
+
+    def counting(archive_path):
+        reads.append(archive_path)
+        return orig(archive_path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    importlib.invalidate_caches()
+    assert archive not in reads
+
+
+def test_zip_invalidate_caches_sees_rewritten_archive(tmp_path, monkeypatch):
+    import importlib
+
+    import readability_1_spark  # noqa: F401  (installs the stat gate)
+
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"r1s_zip_probe_b": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("r1s_zip_probe_b", "r1s_zip_probe_c"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    import r1s_zip_probe_b  # noqa: F401
+
+    _write_zip(archive, {"r1s_zip_probe_b": "X = 1\n", "r1s_zip_probe_c": "Y = 2\n"})
+    importlib.invalidate_caches()
+    import r1s_zip_probe_c
+
+    assert r1s_zip_probe_c.Y == 2
+
+
+def test_zip_stat_gate_is_noop_from_python_313(monkeypatch):
+    import types
+    import zipimport
+
+    from readability_1_spark import _zipdir
+
+    def invalidate_caches(self):
+        pass
+
+    def read_directory(archive):
+        pass
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", invalidate_caches)
+    monkeypatch.setattr(zipimport, "_read_directory", read_directory)
+    monkeypatch.setattr(_zipdir, "sys", types.SimpleNamespace(version_info=(3, 13, 0)))
+    _zipdir.install()
+    assert zipimport.zipimporter.invalidate_caches is invalidate_caches
+    assert zipimport._read_directory is read_directory
+
+
+def test_worker_runs_stat_gated_invalidate_caches(spark):
+    """A Python worker that ran the extraction kernel has the stat gate."""
+    import pyarrow as pa
+
+    from readability_1_spark.kernel import make_extraction_kernel
+    from readability_1_spark.pipeline import ensure_worker_imports
+
+    ensure_worker_imports(spark)
+    kernel = make_extraction_kernel()
+
+    def probe(batches):
+        import zipimport
+
+        for out in kernel(batches):
+            method = zipimport.zipimporter.invalidate_caches.__module__
+            yield pa.RecordBatch.from_pydict(
+                {"status": out.column("status"), "method": [method] * out.num_rows}
+            )
+
+    html = "<html><head><title>T</title></head><body><p>hi</p></body></html>"
+    df = spark.createDataFrame(
+        [("c", 0, html, 0)], "conv_id STRING, turn_idx INT, text STRING, part_id INT"
+    )
+    rows = df.mapInArrow(probe, "status STRING, method STRING").collect()
+    expected = "readability_1_spark._zipdir" if sys.version_info < (3, 13) else "zipimport"
+    assert [r.method for r in rows] == [expected]

@@ -13,6 +13,7 @@ from readability_1_spark.pipeline import (
     Storage,
     extract_transcripts,
     gate_html_turns,
+    read_as_of,
     read_consistent,
     run_extraction_job,
     with_partitioning,
@@ -100,11 +101,26 @@ def test_dedup_before_equality_join(spark):
     assert dupes == 0
 
 
-def test_checkpoint_resume_idempotent(spark, tmp_path):
+def _smoke_table(spark):
+    """The `smoke_transcripts` rows, as committed by tools/gen_fixture_parquet.py."""
+    return spark.read.parquet(os.path.join(GOLDENS_DIR, "transcripts_smoke.parquet"))
+
+
+def test_checkpoint_resume_idempotent(spark, tmp_path, monkeypatch):
+    from readability_1_spark import pipeline
+
     root = str(tmp_path / "store")
     storage = Storage(spark, root)
-    df = smoke_transcripts(spark)
+    df = _smoke_table(spark)
     n_parts = 8
+    todo_frames = []
+    extract = pipeline.extract_transcripts
+
+    def spy(todo, *args, **kwargs):
+        todo_frames.append(todo)
+        return extract(todo, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "extract_transcripts", spy)
 
     # First run over only half the partitions (simulate a mid-job failure by
     # feeding a truncated input).
@@ -118,9 +134,24 @@ def test_checkpoint_resume_idempotent(spark, tmp_path):
     total_expected = gated.count()
     assert r1["rows"] + r2["rows"] == total_expected
 
-    # Re-running once more is a no-op (fully idempotent).
-    r3 = run_extraction_job(spark, df, storage, run_id="runA", num_parts=n_parts)
+    # The todo part ids reach the job as a JVM-side frame: no scan of a
+    # driver-list RDD, whose Python tasks would re-pickle them.
+    assert len(todo_frames) == 2
+    for todo in todo_frames:
+        assert "ExistingRDD" not in todo._jdf.queryExecution().sparkPlan().toString()
+
+    # Re-running once more is a no-op (fully idempotent) that only works
+    # out the empty todo set.
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-noop", "resume-noop")
+    try:
+        r3 = run_extraction_job(spark, df, storage, run_id="runA", num_parts=n_parts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert r3["rows"] == 0
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-noop")) <= 2
+    assert len(todo_frames) == 2
+    assert read_as_of(storage, "runA", r3["batch_id"]) is None
 
     view = read_consistent(storage, "runA")
     assert view.count() == total_expected
@@ -605,11 +636,10 @@ def test_read_as_of_time_travel_equivalent(spark, tmp_path):
         run_extraction_job,
         with_partitioning,
     )
-    from readability_1_spark.transcripts import smoke_transcripts
 
     root = str(tmp_path / "store_tt")
     storage = Storage(spark, root)
-    df = smoke_transcripts(spark)
+    df = _smoke_table(spark)
     n_parts = 8
     gated = with_partitioning(gate_html_turns(df), n_parts)
     half = gated.filter(F.col("part_id") < 4).drop("part_id", "salt")

@@ -188,7 +188,7 @@ def test_events_user_stats_ordered_sum_matches_plain_avg_where_exact(spark):
     assert got == plain
 
 
-def test_minhash_pairs_widened_scan_matches_narrow_path(spark):
+def test_minhash_pairs_widened_scan_matches_narrow_path(spark, monkeypatch):
     """The post-close widening of the shingle path: _shingles now
     _widen's its input so the split/explode/partial-distinct — and the
     16-md5 partial agg, whose distinct input is optimizer-eliminated
@@ -202,12 +202,8 @@ def test_minhash_pairs_widened_scan_matches_narrow_path(spark):
     widened = sorted(
         (r.doc_a, r.doc_b) for r in Q._minhash_pairs(docs).collect()
     )
-    orig_widen = Q._widen
-    Q._widen = lambda df, *keys: df
-    try:
-        narrow = sorted(
-            (r.doc_a, r.doc_b) for r in Q._minhash_pairs(docs).collect()
-        )
-    finally:
-        Q._widen = orig_widen
+    monkeypatch.setattr(Q, "_widen", lambda df, *k: df)
+    narrow = sorted(
+        (r.doc_a, r.doc_b) for r in Q._minhash_pairs(docs).collect()
+    )
     assert narrow == widened and len(narrow) > 0
