@@ -4,7 +4,7 @@ Architecture (SURVEY.md):
 * ``dom`` / ``readability`` / ``readerable``: the per-document extraction
   kernel, matching /root/reference (JSDOMParser.js + Readability.js +
   Readability-readerable.js) output exactly.
-* ``kernel``: Arrow-batch wrapper exposing the kernel to ``mapInPandas``.
+* ``kernel``: Arrow-batch wrapper exposing the kernel to ``mapInArrow``.
 * ``pipeline``: the distributed pipeline — HTML gating, salting/skew
   handling, extraction, lineage + metrics, checkpoint/resume.
 * ``transcripts``: deterministic synthetic transcript-table builders.

@@ -1,4 +1,4 @@
-"""Arrow-batch extraction kernel for ``DataFrame.mapInPandas``.
+"""Arrow-batch extraction kernels for ``DataFrame.mapInArrow``.
 
 This is the JVM↔Python boundary of the pipeline (SURVEY.md §3.1): Spark
 streams Arrow record batches of (conv_id, turn_idx, text, part_id) into one
@@ -14,9 +14,7 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 
-import pandas as pd
-
-from .extract import extract_one, extract_one_gated
+from .extract import extract_one, extract_one_gated, is_readerable
 
 OUT_SCHEMA_DDL = (
     "conv_id STRING, turn_idx INT, part_id INT, status STRING, "
@@ -53,56 +51,7 @@ def compute_spans(text_content: str | None, paragraph_texts: list[str]) -> list[
     return spans
 
 
-def _extract_with_spans(html: str, url: str, opts: dict | None,
-                        readerable_gate: bool = False) -> dict | None:
-    if readerable_gate:
-        out = extract_one_gated(html, url=url, opts=opts)
-        if out is None:
-            return None
-    else:
-        out = extract_one(html, url=url, opts=opts)
-    spans: list[dict] = []
-    if out["status"] == "ok":
-        spans = compute_spans(out["text_content"], out.get("paragraph_texts") or [])
-    out["spans"] = spans
-    return out
-
-
-def _extract_batch_columns(conv, turn, part, texts, url, opts,
-                           readerable_gate: bool = False) -> dict:
-    cols: dict[str, list] = {c: [] for c in OUT_COLUMNS}
-    for i in range(len(texts)):
-        t0 = time.perf_counter()
-        html = texts[i]
-        if html is None:
-            if readerable_gate:
-                continue  # the gate drops null payloads too
-            res = {"status": "not_html", "spans": []}
-        else:
-            res = _extract_with_spans(html, url, opts, readerable_gate)
-            if res is None:
-                continue  # gated out: not probably readerable
-        ms = (time.perf_counter() - t0) * 1000.0
-        cols["conv_id"].append(conv[i])
-        cols["turn_idx"].append(turn[i])
-        cols["part_id"].append(part[i])
-        cols["status"].append(res["status"])
-        for f in ("title", "byline", "dir", "content", "text_content",
-                  "excerpt", "site_name"):
-            cols[f].append(res.get(f))
-        cols["length"].append(res.get("length"))
-        cols["spans"].append(res.get("spans", []))
-        metrics = res.get("metrics") or {}
-        cols["candidate_count"].append(metrics.get("candidate_count"))
-        cols["top_score"].append(metrics.get("top_score"))
-        cols["attempts"].append(metrics.get("attempts"))
-        cols["parse_ms"].append(ms)
-    return cols
-
-
-def make_extraction_kernel(url: str = "http://fakehost/test/page.html",
-                           opts: dict | None = None,
-                           readerable_gate: bool = False):
+def make_extraction_kernel(readerable_gate: bool = False):
     """Returns a mapInArrow function: Arrow batches of (conv_id, turn_idx,
     text, part_id) → Arrow batches of OUT_SCHEMA_DDL.  Arrow-direct (no
     pandas materialization) halves the per-batch conversion cost for these
@@ -130,18 +79,37 @@ def make_extraction_kernel(url: str = "http://fakehost/test/page.html",
         ]
     )
     out_schema = pa.schema(list(out_type))
+    extract = extract_one_gated if readerable_gate else extract_one
+    # A null payload is a row of its own, except under the gate, which drops it.
+    null_result = None if readerable_gate else {"status": "not_html"}
 
     def kernel(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            cols = _extract_batch_columns(
-                batch.column("conv_id").to_pylist(),
-                batch.column("turn_idx").to_pylist(),
-                batch.column("part_id").to_pylist()
-                if "part_id" in batch.schema.names
-                else [None] * batch.num_rows,
-                batch.column("text").to_pylist(),
-                url, opts, readerable_gate,
-            )
+            cols: dict[str, list] = {c: [] for c in OUT_COLUMNS}
+            for conv_id, turn_idx, part_id, html in zip(
+                *(batch.column(c).to_pylist()
+                  for c in ("conv_id", "turn_idx", "part_id", "text"))
+            ):
+                t0 = time.perf_counter()
+                res = null_result if html is None else extract(html)
+                if res is None:
+                    continue  # gated out: not probably readerable
+                spans = []
+                if res["status"] == "ok":
+                    spans = compute_spans(res["text_content"], res["paragraph_texts"])
+                ms = (time.perf_counter() - t0) * 1000.0
+                cols["conv_id"].append(conv_id)
+                cols["turn_idx"].append(turn_idx)
+                cols["part_id"].append(part_id)
+                cols["status"].append(res["status"])
+                for f in ("title", "byline", "dir", "content", "text_content",
+                          "length", "excerpt", "site_name"):
+                    cols[f].append(res.get(f))
+                cols["spans"].append(spans)
+                metrics = res.get("metrics") or {}
+                for f in ("candidate_count", "top_score", "attempts"):
+                    cols[f].append(metrics.get(f))
+                cols["parse_ms"].append(ms)
             yield pa.RecordBatch.from_pydict(
                 {f.name: pa.array(cols[f.name], type=f.type) for f in out_schema},
                 schema=out_schema,
@@ -150,30 +118,15 @@ def make_extraction_kernel(url: str = "http://fakehost/test/page.html",
     return kernel
 
 
-def make_readerable_kernel(url: str = "http://fakehost/test/page.html"):
-    """mapInPandas gate: (conv_id, turn_idx, text, part_id) →
+def make_readerable_kernel():
+    """mapInArrow gate: (conv_id, turn_idx, text, part_id) →
     same + readerable boolean (Readability-readerable.js semantics)."""
+    import pyarrow as pa
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .dom import JSDOMParser, ParseFatal
-        from .readerable import is_probably_readerable
-
+    def kernel(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            flags = []
-            for html in batch["text"].tolist():
-                if html is None:
-                    flags.append(False)
-                    continue
-                try:
-                    parser = JSDOMParser()
-                    doc = parser.parse(html, url)
-                    flags.append(
-                        not parser.error_state and is_probably_readerable(doc)
-                    )
-                except (ParseFatal, RecursionError):
-                    flags.append(False)
-            out = batch.copy()
-            out["readerable"] = flags
-            yield out
+            flags = [html is not None and is_readerable(html)
+                     for html in batch.column("text").to_pylist()]
+            yield batch.append_column("readerable", pa.array(flags, pa.bool_()))
 
     return kernel

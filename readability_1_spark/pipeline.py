@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .kernel import OUT_SCHEMA_DDL, make_extraction_kernel
@@ -44,6 +44,45 @@ HTML_GATE = "(?i)<html|<!doctype\\s+html"
 _SHIPPED: set[str] = set()
 
 
+def build_pyfiles_zip(out_dir: str | None = None) -> str:
+    """Zip this package's sources for `--py-files` / `addPyFile` into
+    `out_dir` (default: a per-user temp directory) and return the path.
+
+    The zip is named by a content hash of the sources: edited code always
+    ships fresh, and a pre-existing file at the path can only be a
+    byte-identical build (never someone else's payload), so it is reused."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    sources = []
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                rel = os.path.join("readability_1_spark", os.path.relpath(full, pkg_dir))
+                with open(full, "rb") as fh:
+                    sources.append((rel, fh.read()))
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(rel.encode())
+        digest.update(data)
+    if out_dir is None:
+        out_dir = os.path.join(tempfile.gettempdir(), f"r1s_pyfiles_{os.getuid()}")
+    os.makedirs(out_dir, mode=0o700, exist_ok=True)
+    zip_path = os.path.join(out_dir, f"readability_1_spark_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp_path = zip_path + f".tmp{os.getpid()}"
+        with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel, data in sources:
+                zf.writestr(rel, data)
+        os.replace(tmp_path, zip_path)
+    return zip_path
+
+
 def ensure_worker_imports(spark: SparkSession) -> None:
     """Make this package importable inside executor Python workers no matter
     where the driver was launched from: build the --py-files zip lazily and
@@ -52,55 +91,16 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     key = sc.applicationId
     if key in _SHIPPED:
         return
-    try:
-        import tempfile
-        import zipfile
+    # Nothing to build when the package itself runs from a zip.
+    if os.path.isdir(os.path.dirname(os.path.abspath(__file__))):
+        try:
+            sc.addPyFile(build_pyfiles_zip())
+        except Exception as exc:  # pragma: no cover - depends on context reuse
+            # addPyFile raises if an identically-named file was already
+            # registered in this SparkContext; anything else is worth seeing.
+            import warnings
 
-        import readability_1_spark as pkg
-
-        import hashlib
-
-        pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-        if not os.path.isdir(pkg_dir):  # already running from a zip
-            _SHIPPED.add(key)
-            return
-        # Name the zip by a content hash of the package sources: edited code
-        # always ships fresh, and a pre-existing file at the path can only
-        # be a byte-identical build (never someone else's payload).
-        sources = []
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "readability_1_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    with open(full, "rb") as fh:
-                        sources.append((rel, fh.read()))
-        digest = hashlib.sha256()
-        for rel, data in sources:
-            digest.update(rel.encode())
-            digest.update(data)
-        build_dir = os.path.join(
-            tempfile.gettempdir(), f"r1s_pyfiles_{os.getuid()}"
-        )
-        os.makedirs(build_dir, mode=0o700, exist_ok=True)
-        zip_path = os.path.join(build_dir, f"readability_1_spark_{digest.hexdigest()[:16]}.zip")
-        if not os.path.exists(zip_path):
-            tmp_path = zip_path + f".tmp{os.getpid()}"
-            with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
-                for rel, data in sources:
-                    zf.writestr(rel, data)
-            os.replace(tmp_path, zip_path)
-        sc.addPyFile(zip_path)
-    except Exception as exc:  # pragma: no cover - depends on context reuse
-        # addPyFile raises if an identically-named file was already
-        # registered in this SparkContext; anything else is worth seeing.
-        import warnings
-
-        warnings.warn(f"ensure_worker_imports: {type(exc).__name__}: {exc}")
+            warnings.warn(f"ensure_worker_imports: {type(exc).__name__}: {exc}")
     _SHIPPED.add(key)
 
 
@@ -128,13 +128,17 @@ def with_partitioning(df: DataFrame, num_parts: int) -> DataFrame:
 def extract_transcripts(
     df: DataFrame,
     num_parts: int = 64,
-    opts: dict | None = None,
-    url: str = "http://fakehost/test/page.html",
     readerable_gate: bool = False,
     repartition: bool = True,
     dedup_payloads: bool = False,
 ) -> DataFrame:
     """transcripts → extractions DataFrame (no sink).
+
+    readerable_gate: the kernel checks isProbablyReaderable on the parse it
+    extracts from (not a second parse) and emits only readerable turns.
+
+    repartition=False keeps the input's partitioning (no shuffle), as the
+    streaming path does; part_id is the same either way.
 
     dedup_payloads: agent transcripts re-fetch the same pages constantly; at
     10^12 turns running the kernel once per DISTINCT payload and joining the
@@ -143,12 +147,11 @@ def extract_transcripts(
     becomes the shared per-payload cost.
     """
     ensure_worker_imports(df.sparkSession)
-    gated = gate_html_turns(df)
-    parted = with_partitioning(gated, num_parts)
+    parted = with_partitioning(gate_html_turns(df), num_parts)
     cols = ["conv_id", "turn_idx", "text", "part_id"]
     if dedup_payloads:
         keyed = parted.withColumn("payload_hash", F.sha2(F.col("text"), 256))
-        uniq = (
+        todo = (
             keyed.groupBy("payload_hash")
             .agg(F.first("text").alias("text"))
             .withColumn("conv_id", F.col("payload_hash"))
@@ -158,22 +161,9 @@ def extract_transcripts(
                 F.pmod(F.xxhash64("payload_hash"), F.lit(num_parts)).cast("int"),
             )
         )
-        if repartition:
-            uniq = uniq.repartition(num_parts, "part_id")
-        per_payload = uniq.select(*cols).mapInArrow(
-            make_extraction_kernel(url=url, opts=opts), OUT_SCHEMA_DDL
-        )
-        result_cols = [
-            c for c in per_payload.columns
-            if c not in ("conv_id", "turn_idx", "part_id")
-        ]
-        return keyed.select("conv_id", "turn_idx", "part_id", "payload_hash").join(
-            per_payload.withColumnRenamed("conv_id", "payload_hash").select(
-                "payload_hash", *result_cols
-            ),
-            "payload_hash",
-        ).select("conv_id", "turn_idx", "part_id", *result_cols)
-    slim = parted.select(*cols, "salt")
+        shuffle_key = "part_id"
+    else:
+        todo, shuffle_key = parted.select(*cols, "salt"), "salt"
     if repartition:
         # One hash shuffle on the per-turn salt: spreads hot conversations
         # AND heterogeneous page sizes uniformly.  A size-bucketing variant
@@ -184,18 +174,21 @@ def extract_transcripts(
         # already absorbs the straggler tail, so the sort pays its copy
         # cost without a win.  Oversubscription (num_parts >= 4x cores) is
         # the lever that matters.
-        slim = slim.repartition(num_parts, "salt")
-    slim = slim.select(*cols)
-    if readerable_gate:
-        # Parse-once gate: the kernel itself checks isProbablyReaderable on
-        # the fresh parse and reuses that DOM for extraction, so gating does
-        # not double the parse cost (Readability-readerable.js is meant to
-        # be the cheap pre-check).
-        return slim.mapInArrow(
-            make_extraction_kernel(url=url, opts=opts, readerable_gate=True),
-            OUT_SCHEMA_DDL,
-        )
-    return slim.mapInArrow(make_extraction_kernel(url=url, opts=opts), OUT_SCHEMA_DDL)
+        todo = todo.repartition(num_parts, shuffle_key)
+    extracted = todo.select(*cols).mapInArrow(
+        make_extraction_kernel(readerable_gate=readerable_gate), OUT_SCHEMA_DDL
+    )
+    if not dedup_payloads:
+        return extracted
+    result_cols = [
+        c for c in extracted.columns if c not in ("conv_id", "turn_idx", "part_id")
+    ]
+    return keyed.select("conv_id", "turn_idx", "part_id", "payload_hash").join(
+        extracted.withColumnRenamed("conv_id", "payload_hash").select(
+            "payload_hash", *result_cols
+        ),
+        "payload_hash",
+    ).select("conv_id", "turn_idx", "part_id", *result_cols)
 
 
 def lineage_rollup(extractions: DataFrame, run_id: str) -> DataFrame:
@@ -266,7 +259,6 @@ def run_extraction_job(
     storage: Storage,
     run_id: str | None = None,
     num_parts: int = 64,
-    opts: dict | None = None,
     readerable_gate: bool = False,
 ) -> dict:
     """Checkpointed, idempotently-resumable extraction job.
@@ -321,10 +313,7 @@ def run_extraction_job(
 
     todo = gated.join(F.broadcast(todo_parts), "part_id", "left_semi")
     extractions = (
-        extract_transcripts(
-            todo, num_parts=num_parts, opts=opts, readerable_gate=readerable_gate,
-            repartition=True,
-        )
+        extract_transcripts(todo, num_parts=num_parts, readerable_gate=readerable_gate)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("batch_id", F.lit(batch_id))
     )
@@ -365,23 +354,26 @@ def run_extraction_job(
     return {"run_id": run_id, "batch_id": batch_id, "rows": n_rows}
 
 
+def _latest_per_turn(extractions: DataFrame) -> DataFrame:
+    """One row per (conv_id, turn_idx): the one with the largest parse_ms,
+    so a turn extracted by more than one batch reads back once."""
+    w = Window.partitionBy("conv_id", "turn_idx").orderBy(F.col("parse_ms").desc())
+    return (
+        extractions.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def read_consistent(storage: Storage, run_id: str) -> DataFrame | None:
     """Extractions restricted to checkpointed partitions + de-duplicated per
     (conv_id, turn_idx): the consistent view after any number of resumes."""
-    from pyspark.sql import Window
-
     extractions = storage.read("extractions")
     checkpoints = storage.read("checkpoints")
     if extractions is None or checkpoints is None:
         return None
     done = checkpoints.filter(F.col("run_id") == run_id).select("part_id").distinct()
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(F.col("parse_ms").desc())
-    return (
-        extractions.join(F.broadcast(done), "part_id", "left_semi")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _latest_per_turn(extractions.join(F.broadcast(done), "part_id", "left_semi"))
 
 
 def read_as_of(storage: Storage, run_id: str, batch_id: str) -> DataFrame | None:
@@ -408,14 +400,8 @@ def read_as_of(storage: Storage, run_id: str, batch_id: str) -> DataFrame | None
     done = (
         cp.join(visible, "batch_id", "left_semi").select("part_id").distinct()
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(F.col("parse_ms").desc())
-    return (
+    return _latest_per_turn(
         extractions.filter(F.col("run_id") == run_id)
         .join(F.broadcast(visible), "batch_id", "left_semi")
         .join(F.broadcast(done), "part_id", "left_semi")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

@@ -2,7 +2,7 @@
 
 The north rule's pipeline is batch-with-resume, but the same kernel runs
 under Structured Streaming unchanged: `readStream` → HTML gate →
-`mapInPandas(kernel)` → `writeStream` with checkpointLocation.  Streaming
+`mapInArrow(kernel)` → `writeStream` with checkpointLocation.  Streaming
 checkpoints give exactly-once sink semantics per micro-batch, replacing the
 batch pipeline's per-partition manifest.
 
@@ -16,8 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kernel import OUT_SCHEMA_DDL, make_extraction_kernel
-from .pipeline import HTML_GATE
+from .pipeline import (
+    HTML_GATE,
+    ensure_worker_imports,
+    extract_transcripts,
+    gate_html_turns,
+)
 from .transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -30,19 +34,10 @@ def stream_transcripts_from_dir(spark: SparkSession, input_dir: str,
     )
 
 
-def streaming_extractions(transcripts: DataFrame, num_parts: int = 64,
-                          opts: dict | None = None) -> DataFrame:
-    """Gate + extract on a streaming DataFrame (same kernel as batch)."""
-    from .pipeline import ensure_worker_imports
-
-    ensure_worker_imports(transcripts.sparkSession)
-    gated = transcripts.filter(
-        F.col("text").isNotNull() & F.col("text").rlike(HTML_GATE)
-    ).withColumn(
-        "part_id", F.pmod(F.xxhash64("conv_id"), F.lit(num_parts)).cast("int")
-    )
-    slim = gated.select("conv_id", "turn_idx", "text", "part_id")
-    return slim.mapInArrow(make_extraction_kernel(opts=opts), OUT_SCHEMA_DDL)
+def streaming_extractions(transcripts: DataFrame, num_parts: int = 64) -> DataFrame:
+    """Gate + extract on a streaming DataFrame: the batch path's gate,
+    part_id and kernel, without its shuffle."""
+    return extract_transcripts(transcripts, num_parts, repartition=False)
 
 
 def streaming_quality_metrics(transcripts: DataFrame,
@@ -203,8 +198,6 @@ def streaming_conversation_sessions(transcripts: DataFrame,
     leave open sessions in state and read them on the next run."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .pipeline import ensure_worker_imports
-
     ensure_worker_imports(transcripts.sparkSession)
     return (
         transcripts.select("conv_id", "ts", "text")
@@ -334,13 +327,9 @@ def streaming_neardup_flags(transcripts: DataFrame,
     micro-batches just to fire it."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .pipeline import ensure_worker_imports
-
     ensure_worker_imports(transcripts.sparkSession)
     ws, shingles, bands = minhash_band_sigs(F.col("text"))
-    gated = transcripts.filter(
-        F.col("text").isNotNull() & F.col("text").rlike(HTML_GATE)
-    )
+    gated = gate_html_turns(transcripts)
     banded = (
         gated.select("conv_id", "turn_idx", ws)
         .withColumn("_sh", shingles)

@@ -1,3 +1,4 @@
+import functools
 import json
 import os
 import sys
@@ -7,7 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 GOLDENS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "goldens")
-FIXTURES_DIR = "/root/reference/test/test-pages"
+SMOKE_PQ = os.path.join(GOLDENS_DIR, "transcripts_smoke.parquet")
 
 EDGE_SOURCES = {
     "edge-fragment": "<div><p>Just a fragment without html element.</p></div>",
@@ -33,11 +34,27 @@ def load_golden(slug: str) -> dict:
         return json.load(f)
 
 
+@functools.lru_cache(maxsize=1)
+def _fixture_sources() -> dict[str, str]:
+    """slug → the fixture page's stripped source HTML: turn 1 of
+    conv-<slug> in the committed smoke transcripts
+    (tools/gen_fixture_parquet.py)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(SMOKE_PQ, columns=["conv_id", "text"],
+                      filters=[("turn_idx", "=", 1)]).to_pydict()
+    return {conv[len("conv-"):]: text for conv, text in zip(t["conv_id"], t["text"])}
+
+
 def load_source(slug: str) -> str:
     if slug.startswith("edge-"):
         return EDGE_SOURCES[slug]
-    with open(os.path.join(FIXTURES_DIR, slug, "source.html")) as f:
-        return f.read().strip()
+    return _fixture_sources()[slug]
+
+
+def smoke_table(spark):
+    """The `smoke_transcripts` rows, as committed by tools/gen_fixture_parquet.py."""
+    return spark.read.parquet(SMOKE_PQ)
 
 
 def golden_slugs() -> list[str]:

@@ -10,7 +10,7 @@ import pytest
 from readability_1_spark.dom import JSDOMParser
 from readability_1_spark.readability import Readability, TooManyElemsError
 
-from .conftest import FIXTURES_DIR
+from .conftest import golden_slugs, load_source
 
 
 def _doc(html="<html><div>yo</div></html>"):
@@ -64,8 +64,7 @@ def test_oversized_document_aborts():
 
 
 def _example_source():
-    with open(os.path.join(FIXTURES_DIR, "001", "source.html")) as f:
-        return f.read().strip()
+    return load_source("001")
 
 
 @pytest.mark.parametrize(
@@ -99,16 +98,14 @@ def test_extract_one_gated_equals_gate_then_extract():
     """extract_one_gated(html) must equal: None when isProbablyReaderable is
     False (or the parse fails), else extract_one(html) — the parse-once gate
     is output-identical to gate-then-reparse."""
-    import glob
-
     from readability_1_spark.dom import JSDOMParser, ParseFatal
     from readability_1_spark.extract import extract_one, extract_one_gated
     from readability_1_spark.readerable import is_probably_readerable
 
-    paths = sorted(glob.glob("/root/reference/test/test-pages/*/source.html"))[:30]
+    slugs = [s for s in golden_slugs() if not s.startswith("edge-")][:30]
     checked_kept = checked_dropped = 0
-    for path in paths:
-        html = open(path, encoding="utf-8").read()
+    for slug in slugs:
+        html = load_source(slug)
         parser = JSDOMParser()
         try:
             doc = parser.parse(html, "http://fakehost/test/page.html")
@@ -117,13 +114,41 @@ def test_extract_one_gated_equals_gate_then_extract():
             readerable = False
         gated = extract_one_gated(html)
         if not readerable:
-            assert gated is None, path
+            assert gated is None, slug
             checked_dropped += 1
         else:
             full = extract_one(html)
-            assert gated is not None, path
+            assert gated is not None, slug
             for k in ("status", "title", "byline", "dir", "content",
                       "text_content", "length", "excerpt", "site_name"):
-                assert gated.get(k) == full.get(k), f"{path}:{k}"
+                assert gated.get(k) == full.get(k), f"{slug}:{k}"
             checked_kept += 1
     assert checked_kept >= 10
+
+
+def test_readerable_kernel_fresh_worker_agrees_with_gated_extract():
+    """A page nested deeper than Python's default recursion limit: the
+    readerable kernel in a fresh interpreter (a new Python worker) gives
+    the same answer as extract_one_gated, whatever ran before it."""
+    import subprocess
+    import sys
+
+    code = """
+import pyarrow as pa
+from readability_1_spark.extract import extract_one_gated
+from readability_1_spark.kernel import make_readerable_kernel
+
+para = "<p>" + "A sentence of ordinary article prose, long enough to count. " * 4 + "</p>"
+html = "<html><body>" + "<div>" * 1200 + para * 3 + "</div>" * 1200 + "</body></html>"
+batch = pa.RecordBatch.from_pydict({
+    "conv_id": ["c"], "turn_idx": pa.array([0], pa.int32()), "text": [html],
+    "part_id": pa.array([0], pa.int32()),
+})
+flag = next(make_readerable_kernel()(iter([batch]))).column("readerable")[0].as_py()
+print(flag, extract_one_gated(html) is not None)
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, cwd=repo)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["True", "True"]

@@ -35,7 +35,7 @@ def test_readerable_matches_expected_metadata():
     from readability_1_spark.dom import JSDOMParser
     from readability_1_spark.readerable import is_probably_readerable
 
-    from .conftest import FIXTURES_DIR, GOLDENS_DIR
+    from .conftest import GOLDENS_DIR
 
     with open(os.path.join(GOLDENS_DIR, "_index.json")) as f:
         idx = json.load(f)

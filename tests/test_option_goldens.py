@@ -10,7 +10,7 @@ import pytest
 
 from readability_1_spark import extract_one
 
-from .conftest import FIXTURES_DIR, GOLDENS_DIR
+from .conftest import GOLDENS_DIR, load_source
 
 OPTS_ROOT = os.path.join(GOLDENS_DIR, "opts")
 
@@ -29,9 +29,7 @@ def test_option_variant_equality(variant):
     for slug in _META["slugs"]:
         with open(os.path.join(OPTS_ROOT, variant, slug + ".json")) as f:
             golden = json.load(f)
-        with open(os.path.join(FIXTURES_DIR, slug, "source.html")) as f:
-            src = f.read().strip()
-        mine = extract_one(src, opts=dict(opts))
+        mine = extract_one(load_source(slug), opts=dict(opts))
         assert mine["status"] == golden["status"], (variant, slug)
         if golden["status"] == "ok":
             for field in FIELDS:

@@ -6,10 +6,9 @@ import sys
 
 
 def test_pyfiles_zip_importable(tmp_path):
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.package_pyfiles import build_zip
+    from readability_1_spark.pipeline import build_pyfiles_zip
 
-    zip_path = build_zip(str(tmp_path / "pkg.zip"))
+    zip_path = build_pyfiles_zip(str(tmp_path))
     code = (
         "import sys; sys.path.insert(0, %r); "
         "from readability_1_spark import extract_one; "
@@ -24,13 +23,36 @@ def test_pyfiles_zip_importable(tmp_path):
     assert out.stdout.strip() in ("ok", "null_result")
 
 
+def test_package_pyfiles_cli_writes_given_zip(tmp_path):
+    """The CLI writes the zip to the path it is given and prints it."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zip_path = str(tmp_path / "pkg.zip")
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "package_pyfiles.py"), zip_path],
+        capture_output=True, text=True, cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.splitlines()[0] == f"built {zip_path}"
+    assert os.listdir(tmp_path) == ["pkg.zip"]
+    code = (
+        "import sys; sys.path.insert(0, %r); "
+        "from readability_1_spark import extract_one; "
+        "print(extract_one('<html><body><p>hi</p></body></html>')['status'])" % zip_path
+    )
+    imp = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, cwd="/tmp"
+    )
+    assert imp.returncode == 0, imp.stderr
+    assert imp.stdout.strip() in ("ok", "null_result")
+
+
 def test_spark_submit_end_to_end(tmp_path, spark):
     """The north rule's deployment shape, literally: spark-submit
     --py-files <zip> jobs/extract_job.py over a parquet transcripts table,
     then assert the job wrote extractions + lineage + checkpoints."""
     import shutil
 
-    from tools.package_pyfiles import build_zip
+    from readability_1_spark.pipeline import build_pyfiles_zip
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spark_submit = shutil.which("spark-submit")
@@ -47,7 +69,7 @@ def test_spark_submit_end_to_end(tmp_path, spark):
                                             "transcripts_smoke.parquet"))
     smoke.limit(40).coalesce(1).write.parquet(in_dir)
 
-    zip_path = build_zip(str(tmp_path / "pkg.zip"))
+    zip_path = build_pyfiles_zip(str(tmp_path))
     env = dict(os.environ)
     env.pop("PYSPARK_GATEWAY_PORT", None)
     env.pop("PYSPARK_GATEWAY_SECRET", None)
@@ -77,7 +99,7 @@ def test_spark_submit_tokenize_job(tmp_path, spark):
     reassembles to the per-doc ids + EOS boundaries exactly."""
     import shutil
 
-    from tools.package_pyfiles import build_zip
+    from readability_1_spark.pipeline import build_pyfiles_zip
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spark_submit = shutil.which("spark-submit")
@@ -88,7 +110,7 @@ def test_spark_submit_tokenize_job(tmp_path, spark):
             os.path.dirname(pyspark.__file__), "bin", "spark-submit"
         )
     out_dir = str(tmp_path / "tok")
-    zip_path = build_zip(str(tmp_path / "pkg.zip"))
+    zip_path = build_pyfiles_zip(str(tmp_path))
     env = dict(os.environ)
     env.pop("PYSPARK_GATEWAY_PORT", None)
     env.pop("PYSPARK_GATEWAY_SECRET", None)

@@ -18,9 +18,9 @@ from readability_1_spark.pipeline import (
     run_extraction_job,
     with_partitioning,
 )
-from readability_1_spark.transcripts import scaled_transcripts, smoke_transcripts
+from readability_1_spark.transcripts import scaled_transcripts
 
-from .conftest import GOLDENS_DIR
+from .conftest import GOLDENS_DIR, smoke_table
 
 
 def _goldens_by_slug() -> dict:
@@ -35,7 +35,7 @@ def _goldens_by_slug() -> dict:
 
 @pytest.fixture(scope="module")
 def extracted(spark):
-    df = smoke_transcripts(spark)
+    df = smoke_table(spark)
     return extract_transcripts(df, num_parts=16).collect(), df
 
 
@@ -94,16 +94,11 @@ def test_window_ordering_invariants(spark):
 
 
 def test_dedup_before_equality_join(spark):
-    df = smoke_transcripts(spark)
+    df = smoke_table(spark)
     dupes = (
         df.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
     )
     assert dupes == 0
-
-
-def _smoke_table(spark):
-    """The `smoke_transcripts` rows, as committed by tools/gen_fixture_parquet.py."""
-    return spark.read.parquet(os.path.join(GOLDENS_DIR, "transcripts_smoke.parquet"))
 
 
 def test_checkpoint_resume_idempotent(spark, tmp_path, monkeypatch):
@@ -111,7 +106,7 @@ def test_checkpoint_resume_idempotent(spark, tmp_path, monkeypatch):
 
     root = str(tmp_path / "store")
     storage = Storage(spark, root)
-    df = _smoke_table(spark)
+    df = smoke_table(spark)
     n_parts = 8
     todo_frames = []
     extract = pipeline.extract_transcripts
@@ -166,7 +161,7 @@ def test_explain_has_pushed_filter_and_pruned_scan(spark, tmp_path):
     """The HTML gate must reach the parquet scan and the scan must not read
     payload-irrelevant columns after projection."""
     p = str(tmp_path / "t.parquet")
-    smoke_transcripts(spark).write.mode("overwrite").parquet(p)
+    smoke_table(spark).write.mode("overwrite").parquet(p)
     df = spark.read.parquet(p)
     plan = (
         gate_html_turns(df)
@@ -180,9 +175,9 @@ def test_explain_has_pushed_filter_and_pruned_scan(spark, tmp_path):
 def test_dedup_payloads_equivalent_output(spark):
     """dedup_payloads must not change any per-turn output field (kernel is a
     pure function of the payload)."""
-    from readability_1_spark.transcripts import scaled_transcripts
-
-    df = scaled_transcripts(spark, 600)
+    smoke = smoke_table(spark)
+    # A renamed copy of every conversation, so each payload repeats.
+    df = smoke.unionByName(smoke.withColumn("conv_id", F.concat(F.lit("copy-"), "conv_id")))
     plain = {
         (r["conv_id"], r["turn_idx"]): (r["status"], r["text_content"], r["title"])
         for r in extract_transcripts(df, num_parts=8).collect()
@@ -218,13 +213,15 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_bucketed_b")
 
 
-def test_readerable_gate_path(spark):
+@pytest.mark.parametrize("dedup_payloads", [False, True])
+def test_readerable_gate_path(spark, dedup_payloads):
     """readerable_gate=True must run the gate kernel and only extract
-    readerable documents (matching the goldens' readerable flags)."""
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    df = smoke_transcripts(spark)
-    gated_rows = extract_transcripts(df, num_parts=8, readerable_gate=True).collect()
+    readerable documents (matching the goldens' readerable flags), with or
+    without payload dedup."""
+    df = smoke_table(spark)
+    gated_rows = extract_transcripts(
+        df, num_parts=8, readerable_gate=True, dedup_payloads=dedup_payloads
+    ).collect()
     gold = _goldens_by_slug()
     expected_readerable = {
         f"conv-{slug}" for slug, g in gold.items() if g.get("readerable")
@@ -246,9 +243,7 @@ def test_pretrain_curation_pipeline(spark, tmp_path):
     Duplicate payloads collapse to one curated doc; short/chatter turns are
     gated out; stats reflect the written data."""
     from readability_1_spark.pretrain import curate_pretraining_data, run_pretrain_job
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    t = smoke_transcripts(spark)
+    t = smoke_table(spark)
     # Duplicate one conversation's HTML turn under a new conv to prove the
     # content-hash dedup keeps exactly one.
     dup = t.filter(F.col("conv_id") == "conv-001").withColumn(
@@ -395,9 +390,7 @@ def test_pretrain_split_and_packing(spark, tmp_path):
         pack_sequences,
         run_pretrain_job,
     )
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    t = smoke_transcripts(spark)
+    t = smoke_table(spark)
     curated = curate_pretraining_data(t, num_parts=8)
     rows = curated.collect()
     assert rows and all(r.split in ("train", "val", "test") for r in rows)
@@ -639,7 +632,7 @@ def test_read_as_of_time_travel_equivalent(spark, tmp_path):
 
     root = str(tmp_path / "store_tt")
     storage = Storage(spark, root)
-    df = _smoke_table(spark)
+    df = smoke_table(spark)
     n_parts = 8
     gated = with_partitioning(gate_html_turns(df), n_parts)
     half = gated.filter(F.col("part_id") < 4).drop("part_id", "salt")
@@ -679,9 +672,7 @@ def test_curate_model_quality_score(spark):
     corpus's own rule-gate labels (pre-gate population) and attaches a
     deterministic quality_score to every curated doc."""
     from readability_1_spark.pretrain import curate_pretraining_data
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    t = smoke_transcripts(spark)
+    t = smoke_table(spark)
     curated = curate_pretraining_data(
         t, num_parts=8, model_score=True
     ).collect()
@@ -714,9 +705,7 @@ def test_curate_gopher_gate(spark):
 
     from readability_1_spark.pretrain import curate_pretraining_data
     from readability_1_spark.queries import gopher_passes_cond
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    t = smoke_transcripts(spark)
+    t = smoke_table(spark)
     plain = curate_pretraining_data(t, num_parts=8)
     assert "n_words" not in plain.columns
     plain_keys = {(r.conv_id, r.turn_idx) for r in plain.collect()}
@@ -812,9 +801,7 @@ def test_curate_c4_and_repetition_gates(spark):
 
     from readability_1_spark.pretrain import curate_pretraining_data
     from readability_1_spark.queries import c4_passes_cond
-    from readability_1_spark.transcripts import smoke_transcripts
-
-    t = smoke_transcripts(spark)
+    t = smoke_table(spark)
     plain = curate_pretraining_data(t, num_parts=8)
     assert "n_kept_lines" not in plain.columns
     assert "dup_line_frac" not in plain.columns

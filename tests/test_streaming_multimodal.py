@@ -10,12 +10,13 @@ def test_streaming_extraction_available_now(spark, tmp_path):
         stream_transcripts_from_dir,
         streaming_extractions,
     )
-    from readability_1_spark.transcripts import smoke_transcripts
+
+    from .conftest import smoke_table
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    smoke_transcripts(spark).write.mode("overwrite").parquet(in_dir)
+    smoke_table(spark).write.mode("overwrite").parquet(in_dir)
 
     stream = stream_transcripts_from_dir(spark, in_dir, max_files_per_trigger=4)
     assert stream.isStreaming

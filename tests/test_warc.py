@@ -1,7 +1,8 @@
 """WARC source: Common Crawl-shaped input end-to-end into the kernel."""
 
 import gzip
-import os
+
+from .conftest import load_source
 
 
 def test_warc_parse_roundtrip():
@@ -42,9 +43,7 @@ def test_warc_to_extraction_end_to_end(spark, tmp_path):
         warc_as_transcripts,
     )
 
-    fixture = open(
-        "/root/reference/test/test-pages/001/source.html", encoding="utf-8"
-    ).read()
+    fixture = load_source("001")
     pages = [
         ("http://news.example.com/article-1", "2026-01-01T00:00:00Z", fixture),
         ("http://news.example.com/article-2", "2026-01-01T00:05:00Z",
@@ -80,9 +79,7 @@ def test_jsonl_transcripts_source(spark, tmp_path):
     from readability_1_spark.pipeline import extract_transcripts
     from readability_1_spark.transcripts import transcripts_from_jsonl
 
-    fixture = open(
-        "/root/reference/test/test-pages/001/source.html", encoding="utf-8"
-    ).read()
+    fixture = load_source("001")
     lines = [
         {"conv_id": "c1", "turn_idx": 0, "role": "user", "text": "hi",
          "tool": None, "ts": "2026-01-01T00:00:00Z"},
@@ -107,9 +104,7 @@ def test_warc_to_curated_corpus(spark, tmp_path):
     from readability_1_spark.pretrain import run_pretrain_job
     from readability_1_spark.warc import build_warc_bytes, read_warc, warc_as_transcripts
 
-    fixture = open(
-        "/root/reference/test/test-pages/001/source.html", encoding="utf-8"
-    ).read()
+    fixture = load_source("001")
     pages = [
         ("http://a.example.com/post", "2026-01-01T00:00:00Z", fixture),
         ("http://b.example.com/mirror", "2026-01-01T01:00:00Z", fixture),  # dup

@@ -1,37 +1,34 @@
 """Package the engine for `spark-submit --py-files` (north-rule packaging
-clause): zips readability_1_spark/ into dist/readability_1_spark.zip and
-prints the submit command.
+clause): zips readability_1_spark/ into dist/readability_1_spark.zip (or the
+zip path given) and prints the submit command.  The zip's contents come from
+`pipeline.build_pyfiles_zip`, the builder `ensure_worker_imports` ships with
+`addPyFile`.
 
 The package is pure Python (stdlib + pandas/pyarrow already on executors),
 so one zip on the executors' PYTHONPATH is the whole deployment.
+
+Run: python3 tools/package_pyfiles.py [out.zip]
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import zipfile
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def build_zip(out_path: str | None = None) -> str:
-    out_path = out_path or os.path.join(REPO, "dist", "readability_1_spark.zip")
-    os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    pkg = os.path.join(REPO, "readability_1_spark")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            if "__pycache__" in root:
-                continue
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, REPO))
-    return out_path
-
+from readability_1_spark.pipeline import build_pyfiles_zip  # noqa: E402
 
 if __name__ == "__main__":
-    path = build_zip(sys.argv[1] if len(sys.argv) > 1 else None)
+    path = os.path.abspath(
+        sys.argv[1] if len(sys.argv) > 1
+        else os.path.join(REPO, "dist", "readability_1_spark.zip")
+    )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(path)) as tmp:
+        os.replace(build_pyfiles_zip(tmp), path)
     print(f"built {path}")
     print(
         "submit with:\n"

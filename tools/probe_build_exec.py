@@ -33,6 +33,9 @@ def bench_query_names() -> list[str]:
     src = open(os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "bench.py")).read()
     m = re.search(r"for name in \(\n(.*?)\n    \):", src, re.S)
+    if m is None:
+        sys.exit("probe_build_exec: no `for name in (...)` query loop found in "
+                 "bench.py; pass the query names on the command line")
     body = "(" + m.group(1) + ")"
     return list(ast.literal_eval(body))
 
