@@ -47,13 +47,12 @@ from .queries import (
     PII_EMAIL,
     PII_PHONE,
     PII_URL,
-    SPLIT_TRAIN_LT,
-    SPLIT_VAL_LT,
     STOPWORDS,
-    TOKEN_SPLIT,
     _md5_bucket,
     _minhash_pairs,
     _shingle_array_expr,
+    _split_of,
+    _words,
     connected_components,
     ffd_pack_ids,
     greedy_pack_ids,
@@ -68,11 +67,7 @@ def _doc_key():
 def shingle_set(texts: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct 3-word shingles of a (small) text corpus — the benchmark
     side of the decontamination stage.  Meant to be broadcast."""
-    ws = texts.select(
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda x: x != ""
-        ).alias("ws")
-    )
+    ws = texts.select(_words(text_col).alias("ws"))
     return ws.select(F.explode(_shingle_array_expr()).alias("shingle")).distinct()
 
 
@@ -218,10 +213,7 @@ def curate_pretraining_data(
         sh = (
             deduped.select(
                 "conv_id", "turn_idx",
-                F.filter(
-                    F.split(F.lower(F.col("text_content")), TOKEN_SPLIT),
-                    lambda x: x != "",
-                ).alias("ws"),
+                _words("text_content").alias("ws"),
             )
             .select("conv_id", "turn_idx", F.explode(_shingle_array_expr()).alias("shingle"))
             .distinct()
@@ -331,9 +323,7 @@ def curate_pretraining_data(
     else:
         deduped = deduped.withColumn("n_pii_redactions", F.lit(0))
 
-    ws = F.filter(
-        F.split(F.lower(F.col("text_content")), TOKEN_SPLIT), lambda x: x != ""
-    )
+    ws = _words("text_content")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_tokens = F.size(ws)
     n_stop = F.size(F.filter(ws, lambda x: F.array_contains(stop_arr, x)))
@@ -434,12 +424,7 @@ def curate_pretraining_data(
         bucket = _md5_bucket(F.col("content_hash"))
     else:
         raise ValueError(f"split_by must be 'content' or 'conversation', got {split_by!r}")
-    return gated.withColumn(
-        "split",
-        F.when(bucket < SPLIT_TRAIN_LT, F.lit("train"))
-        .when(bucket < SPLIT_VAL_LT, F.lit("val"))
-        .otherwise(F.lit("test")),
-    )
+    return gated.withColumn("split", _split_of(bucket))
 
 
 def pack_sequences(

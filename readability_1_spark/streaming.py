@@ -227,36 +227,28 @@ NEARDUP_STATE_DDL = "owner_conv_id STRING, owner_turn_idx INT"
 
 def minhash_band_sigs(col_text):
     """Per-ROW MinHash band signatures over a text column — the same
-    16-hash / 4-band family as the batch `_minhash_pairs`
-    (queries.py:1049), but computed entirely inside the row (array_min
-    over the row's own shingle array instead of a groupBy-min over the
-    exploded shingle set; min over the multiset equals min over the set),
-    so a streaming query needs NO pre-aggregation before its one stateful
-    op.  Returns an array of 4 (band, sig) structs."""
-    from .queries import N_BANDS, N_MINHASH, TOKEN_SPLIT, _shingle_array_expr
+    16-hash / 4-band family as the batch `queries._minhash_bands`, but
+    computed entirely inside the row (array_min over the row's own shingle
+    array instead of a groupBy-min over the exploded shingle set; min over
+    the multiset equals min over the set), so a streaming query needs NO
+    pre-aggregation before its one stateful op.  Returns an array of 4
+    (band, sig) structs."""
+    from .queries import (
+        N_MINHASH,
+        _band_sigs,
+        _seeded_hash,
+        _shingle_array_expr,
+        _words,
+    )
 
-    ws = F.filter(F.split(F.lower(col_text), TOKEN_SPLIT), lambda x: x != "")
+    ws = _words(col_text)
     # _shingle_array_expr reads a column literally named `ws`
     shingles = _shingle_array_expr()
-    per_band = N_MINHASH // N_BANDS
-
-    def mh(seed):
-        return F.array_min(
-            F.transform(
-                F.col("_sh"),
-                lambda s: F.md5(F.concat_ws(":", F.lit(seed), s)),
-            )
-        )
-
-    sig = [
-        F.md5(F.concat_ws(",", *[mh(band * per_band + j) for j in range(per_band)]))
-        for band in range(N_BANDS)
+    mins = [
+        F.array_min(F.transform(F.col("_sh"), lambda s: _seeded_hash(seed, s)))
+        for seed in range(N_MINHASH)
     ]
-    bands = F.array(*[
-        F.struct(F.lit(b).alias("band"), sig[b].alias("sig"))
-        for b in range(N_BANDS)
-    ])
-    return ws.alias("ws"), shingles, bands
+    return ws.alias("ws"), shingles, _band_sigs(mins)
 
 
 def make_neardup_fn(state_ttl_seconds: int | None = None):

@@ -4,11 +4,12 @@ Schema is the BASELINE.json input_hint, exactly:
   conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
   ts:timestamp
 
-Payload HTML comes from the reference fixture corpus (the equality target);
-non-HTML chatter, fragments, and parse-error snippets are mixed in so the
-pipeline's gating and status handling are exercised.  conv_id row counts are
-deliberately skewed (a few conversations carry many turns) to exercise the
-salting path.
+Payload HTML is the reference fixture corpus (the equality target) plus a
+few edge cases, read from the committed smoke table
+tests/goldens/transcripts_smoke.parquet; non-HTML chatter, fragments, and
+parse-error snippets are mixed in so the pipeline's gating and status
+handling are exercised.  conv_id row counts are deliberately skewed (a few
+conversations carry many turns) to exercise the salting path.
 
 Built Spark-side for scale: a `spark.range`-derived skeleton is joined to a
 broadcast fixture-payload dimension, so the builder itself never collects or
@@ -18,7 +19,6 @@ loops on the driver and works at any row count.
 from __future__ import annotations
 
 import datetime
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,24 +31,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-FIXTURES_DIR = "/root/reference/test/test-pages"
-
-EDGE_SOURCES = {
-    "edge-fragment": "<div><p>Just a fragment without html element.</p></div>",
-    "edge-no-body": "<html><div>No body element here at all.</div></html>",
-    "edge-script-lt": (
-        "<html><body><script>if(x<4){go()}</script><p>body text</p></body></html>"
-    ),
-    "edge-plain-html": (
-        '<html><head><title>Tiny page: a test</title></head><body><div id="main">'
-        + "".join(
-            f"<p>Paragraph {i} with some, commas, and enough length to score well"
-            " in the readability algorithm, yes indeed it keeps going and going.</p>"
-            for i in range(30)
-        )
-        + "</div></body></html>"
-    ),
-}
+SMOKE_PQ = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests", "goldens", "transcripts_smoke.parquet",
+)
 
 CHATTER = [
     "Sure — let me look into that for you.",
@@ -72,23 +58,21 @@ TRANSCRIPT_SCHEMA = StructType(
 _EPOCH = datetime.datetime(2026, 1, 1)
 
 
-def fixture_slugs() -> list[str]:
-    return sorted(
-        d for d in os.listdir(FIXTURES_DIR)
-        if os.path.isdir(os.path.join(FIXTURES_DIR, d))
-    )
-
-
 def _payloads() -> list[tuple[int, str, str]]:
-    """(payload_id, slug, html) for every fixture page + edge case."""
-    rows = []
-    for i, slug in enumerate(fixture_slugs()):
-        with open(os.path.join(FIXTURES_DIR, slug, "source.html")) as f:
-            rows.append((i, slug, f.read().strip()))
-    base = len(rows)
-    for j, (slug, html) in enumerate(sorted(EDGE_SOURCES.items())):
-        rows.append((base + j, slug, html))
-    return rows
+    """(payload_id, slug, html) for every fixture page + edge case: turn 1
+    of each conv-<slug> in the committed smoke table, numbered in the
+    order of its turn 0's ts (smoke_transcripts stamps payload pid's turn
+    0 at _EPOCH + pid minutes, so this recovers the ids it was built
+    with)."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(
+        SMOKE_PQ, columns=["conv_id", "turn_idx", "text", "ts"]
+    ).to_pylist()
+    ts0 = {r["conv_id"]: r["ts"] for r in rows if r["turn_idx"] == 0}
+    html = {r["conv_id"]: r["text"] for r in rows if r["turn_idx"] == 1}
+    convs = sorted(html, key=ts0.__getitem__)
+    return [(pid, conv[len("conv-"):], html[conv]) for pid, conv in enumerate(convs)]
 
 
 def smoke_transcripts(spark: SparkSession) -> DataFrame:

@@ -39,11 +39,9 @@ def _fixture_sources() -> dict[str, str]:
     """slug → the fixture page's stripped source HTML: turn 1 of
     conv-<slug> in the committed smoke transcripts
     (tools/gen_fixture_parquet.py)."""
-    import pyarrow.parquet as pq
+    from readability_1_spark.transcripts import _payloads
 
-    t = pq.read_table(SMOKE_PQ, columns=["conv_id", "text"],
-                      filters=[("turn_idx", "=", 1)]).to_pydict()
-    return {conv[len("conv-"):]: text for conv, text in zip(t["conv_id"], t["text"])}
+    return {slug: html for _pid, slug, html in _payloads()}
 
 
 def load_source(slug: str) -> str:

@@ -93,6 +93,19 @@ def test_window_ordering_invariants(spark):
     assert checked["ts_regressions"] == 0
 
 
+def test_smoke_transcripts_equal_committed_table(spark):
+    """smoke_transcripts takes its pages from the committed smoke table and
+    rebuilds that table row for row (payload numbering included)."""
+    from readability_1_spark.transcripts import smoke_transcripts
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    built = rows(smoke_transcripts(spark))
+    assert len(built) == 315
+    assert built == rows(smoke_table(spark))
+
+
 def test_dedup_before_equality_join(spark):
     df = smoke_table(spark)
     dupes = (

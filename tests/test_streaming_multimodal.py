@@ -42,10 +42,11 @@ def test_streaming_windowed_metrics(spark, tmp_path):
         stream_transcripts_from_dir,
         streaming_quality_metrics,
     )
-    from readability_1_spark.transcripts import smoke_transcripts
+
+    from .conftest import smoke_table
 
     in_dir = str(tmp_path / "in")
-    smoke_transcripts(spark).write.mode("overwrite").parquet(in_dir)
+    smoke_table(spark).write.mode("overwrite").parquet(in_dir)
     stream = stream_transcripts_from_dir(spark, in_dir)
     metrics = streaming_quality_metrics(stream, window="10 minutes")
     q = (
@@ -1394,12 +1395,13 @@ def test_streaming_neardup_flags(spark, tmp_path):
     first-wins within a micro-batch, persists across micro-batches AND
     across query restarts (checkpointed state); an exact re-send flags
     against the original, a one-word-append near-dup flags iff it shares a
-    band with the original (asserted against a batch recomputation of the
-    same band signatures), and vocabulary-disjoint docs stay clean."""
+    band with the original (asserted against the batch `_minhash_bands` of
+    the same texts), and vocabulary-disjoint docs stay clean."""
     import datetime
 
     from pyspark.sql import functions as F
 
+    from readability_1_spark.queries import _minhash_bands
     from readability_1_spark.streaming import (
         minhash_band_sigs,
         neardup_collapse,
@@ -1465,20 +1467,28 @@ def test_streaming_neardup_flags(spark, tmp_path):
         assert resend.is_neardup
         assert (resend.matched_conv_id, resend.matched_turn_idx) == ("c0", 0)
 
-        # B's verdict must equal the batch recomputation: near-dup iff it
-        # shares >= 1 band signature with A.
+        # The per-row band signatures are the batch family's: they equal
+        # _minhash_bands over the same texts as (doc_id, text) documents.
+        # B's verdict must match those bands: near-dup iff it shares >= 1
+        # band signature with A.
+        texts = spark.createDataFrame(
+            [(0, a_text), (1, b_text)], "doc_id long, text string"
+        )
         ws, shingles, bands = minhash_band_sigs(F.col("text"))
-        batch = (
-            spark.createDataFrame([("a", a_text), ("b", b_text)], "k string, text string")
-            .select("k", ws).withColumn("_sh", shingles)
-            .select("k", F.explode(bands).alias("x"))
-            .select("k", "x.band", "x.sig")
+        per_row = sorted(
+            tuple(r)
+            for r in texts.select("doc_id", ws).withColumn("_sh", shingles)
+            .select("doc_id", F.explode(bands).alias("x"))
+            .select("doc_id", "x.band", "x.sig")
             .collect()
         )
+        batch = sorted(tuple(r) for r in _minhash_bands(texts).collect())
+        assert len(batch) == 8
+        assert per_row == batch
         sigs = {}
-        for r in batch:
-            sigs.setdefault(r.k, {})[r.band] = r.sig
-        expected_b = any(sigs["a"][b] == sigs["b"][b] for b in sigs["a"])
+        for doc_id, band, sig in batch:
+            sigs.setdefault(doc_id, {})[band] = sig
+        expected_b = any(sigs[0][b] == sigs[1][b] for b in sigs[0])
         assert verdicts[("c2", 0)].is_neardup == expected_b
 
         # Restart persistence: a third batch re-sends C exactly; the

@@ -3,7 +3,9 @@
 * tests/goldens/transcripts_smoke.parquet — the deterministic smoke
   transcripts table (same rows as transcripts.smoke_transcripts), written
   with pyarrow so the file is a single stable parquet both Spark and DuckDB
-  read identically.
+  read identically.  The file is its own page source: smoke_transcripts
+  reads each payload's HTML back from it (turn 1 of conv-<slug>), so a
+  rerun rewrites the same rows.
 * tests/goldens/goldens.parquet — reference-derived expected extraction
   results per HTML-bearing (conv_id, turn_idx), including the deterministic
   part_id (pmod(xxhash64(conv_id), 64)) so lineage rollups are oracle-
