@@ -6,7 +6,6 @@ the substring-count identities and the md5 shuffle polynomial over the
 real corpora, plus crafted corpora pinning every branch (planted
 mojibake/control chars, license markers, verdict precedence)."""
 
-import hashlib
 import re
 from collections import defaultdict
 
@@ -27,16 +26,11 @@ from readability_1_spark.queries import (
     q_training_shuffle_plan,
 )
 
+from .replicas import _md5_poly
+
 SF = "/root/testdata/sf0.001"
 
 _CTRL = re.compile(CTRL_RE)
-
-
-def _md5_poly(s: str, mod: int) -> int:
-    h = 0
-    for ch in hashlib.md5(s.encode()).hexdigest()[:8]:
-        h = h * 31 + ord(ch)
-    return h % mod
 
 
 def test_mojibake_replica_real_corpus(spark):

@@ -7,7 +7,6 @@ over the real corpus, plus crafted corpora pinning each branch
 (every invisible-char class; weight-proportional draws; duplicated vs
 unique content ordering)."""
 
-import hashlib
 import math
 import re
 from collections import Counter
@@ -31,6 +30,8 @@ from readability_1_spark.queries import (
     weighted_sample_frame,
 )
 
+from .replicas import _md5_poly, _round_repr
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -38,28 +39,6 @@ def _docs():
     return pq.read_table(
         f"{SF}/documents.parquet", columns=["doc_id", "text"]
     ).to_pylist()
-
-
-def _md5_poly(s: str, mod: int) -> int:
-    h = 0
-    for ch in hashlib.md5(s.encode()).hexdigest()[:8]:
-        h = h * 31 + ord(ch)
-    return h % mod
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    """Spark F.round-on-DOUBLE twin: Java BigDecimal.valueOf rounds the
-    SHORTEST decimal repr (Double.toString) HALF_UP — not the exact binary
-    value (which _round6_half_up rounds, and which diverges on the
-    integer/integer quotients here that land exactly on ...5 boundaries)."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 def _shingle_set(text: str) -> set:

@@ -6,7 +6,6 @@ Independent evidence beyond the DuckDB oracles: pure-Python replays
 moment math) over the real corpora, plus crafted corpora pinning each
 verdict branch and estimator edge case."""
 
-import decimal
 import math
 from collections import defaultdict
 
@@ -25,17 +24,9 @@ from readability_1_spark.queries import (
     synthetic_flags_frame,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    """Spark F.round-on-DOUBLE twin (shortest-decimal-repr HALF_UP)."""
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 # ------------------------------------------------------------------- slop

@@ -7,7 +7,6 @@ over the real corpora, plus crafted corpora pinning evidence ordering,
 negative selection and span invariants."""
 
 import hashlib
-import re
 from collections import defaultdict
 
 import pyarrow.parquet as pq
@@ -21,7 +20,6 @@ from readability_1_spark.queries import (
     GROUND_NGRAM,
     GROUND_P1,
     GROUND_P2,
-    TOKEN_SPLIT,
     TRANSCRIPTS_PQ,
     contrastive_frame,
     fim_span_frame,
@@ -31,18 +29,9 @@ from readability_1_spark.queries import (
     q_grounding_overlap_score,
 )
 
+from .replicas import _md5_poly, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _md5_poly(s: str, mod: int) -> int:
-    h = 0
-    for ch in hashlib.md5(s.encode()).hexdigest()[:8]:
-        h = h * 31 + ord(ch)
-    return h % mod
-
-
-def _toks(text: str) -> list:
-    return [w for w in re.split(TOKEN_SPLIT, text.lower()) if w != ""]
 
 
 def _grams(text: str) -> set:

@@ -5,7 +5,6 @@ Independent evidence beyond the DuckDB oracles: pure-Python replays over
 the real corpora plus crafted corpora pinning cacheability, each OCR
 signal, and the band thresholds."""
 
-import decimal
 import hashlib
 import re
 from collections import defaultdict
@@ -17,7 +16,6 @@ from readability_1_spark.queries import (
     CONSTRAINT_MARKERS,
     MIXED_ALNUM_PARTS,
     NUMBERED_REQ_RE,
-    TOKEN_SPLIT,
     TRANSCRIPTS_PQ,
     instruction_complexity_frame,
     ocr_garbage_frame,
@@ -27,21 +25,9 @@ from readability_1_spark.queries import (
     shared_prefix_frame,
 )
 
+from .replicas import _round_repr, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text: str) -> list:
-    return [w for w in re.split(TOKEN_SPLIT, text.lower()) if w != ""]
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    """Spark F.round-on-DOUBLE twin (shortest-decimal-repr HALF_UP)."""
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 # ------------------------------------------------------------ prefix cache

@@ -5,9 +5,7 @@ Independent evidence beyond the DuckDB oracles: pure-Python replays over
 the real corpora, the no-time-leakage ordering property, crafted refusal
 corpora, and an idf-ranking replica of the self-retrieval eval."""
 
-import hashlib
 import math
-import re
 from collections import defaultdict
 
 import pyarrow.parquet as pq
@@ -18,7 +16,6 @@ from readability_1_spark.queries import (
     REFUSAL_MARKERS,
     TIME_TRAIN_PCT,
     TIME_VAL_PCT,
-    TOKEN_SPLIT,
     TRANSCRIPTS_PQ,
     q_refusal_rate_scan,
     q_search_mrr_eval,
@@ -26,18 +23,9 @@ from readability_1_spark.queries import (
     refusal_frame,
 )
 
+from .replicas import _md5_poly, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text: str) -> list:
-    return [w for w in re.split(TOKEN_SPLIT, text.lower()) if w != ""]
-
-
-def _md5_poly(s: str, mod: int) -> int:
-    h = 0
-    for ch in hashlib.md5(s.encode()).hexdigest()[:8]:
-        h = h * 31 + ord(ch)
-    return h % mod
 
 
 # ------------------------------------------------------------- time split

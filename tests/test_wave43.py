@@ -13,7 +13,6 @@ import pyarrow.parquet as pq
 
 from readability_1_spark.queries import (
     CODE_KEYWORDS,
-    TOKEN_SPLIT,
     code_detect_frame,
     lexical_diversity_frame,
     markdown_frame,
@@ -22,11 +21,9 @@ from readability_1_spark.queries import (
     q_markdown_structure_stats,
 )
 
+from .replicas import _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text: str) -> list:
-    return [w for w in re.split(TOKEN_SPLIT, text.lower()) if w != ""]
 
 
 # ----------------------------------------------------- lexical diversity

@@ -7,7 +7,6 @@ real corpora, plus crafted transcripts pinning the trend-sign and
 NULL-slope semantics."""
 
 import math
-import re
 from collections import Counter, defaultdict
 
 import pyarrow.parquet as pq
@@ -15,7 +14,6 @@ import pyarrow.parquet as pq
 from readability_1_spark.queries import (
     HEAPS_BUCKETS,
     KEYNESS_TOP_K,
-    TOKEN_SPLIT,
     TRANSCRIPTS_PQ,
     q_assistant_verbosity_trend,
     q_heaps_law_fit,
@@ -23,11 +21,9 @@ from readability_1_spark.queries import (
     verbosity_trend_frame,
 )
 
+from .replicas import _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text: str) -> list:
-    return [w for w in re.split(TOKEN_SPLIT, text.lower()) if w != ""]
 
 
 # ------------------------------------------------------------- heaps law

@@ -28,20 +28,9 @@ from readability_1_spark.queries import (
     rake_frame,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    """Spark F.round-on-DOUBLE twin (BigDecimal.valueOf == shortest repr,
-    HALF_UP) — see test_wave36 for the gotcha writeup."""
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 def _words(text: str):

@@ -27,19 +27,10 @@ from readability_1_spark.queries import (
     retention_cohort_frame,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
 EPOCH = datetime.datetime(1970, 1, 1)
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 def _eus(dt) -> int:

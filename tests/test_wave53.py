@@ -24,18 +24,9 @@ from readability_1_spark.queries import (
     q_sole_late_supplier,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 # ------------------------------------------------ Q18 large volume

@@ -23,19 +23,10 @@ from readability_1_spark.queries import (
     q_uncertainty_sample_topk,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
 EPOCH = datetime.datetime(1970, 1, 1)
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 # ---------------------------------------------- title collisions

@@ -26,18 +26,9 @@ from readability_1_spark.queries import (
     tool_error_frame,
 )
 
+from .replicas import _round_repr
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round_repr(x: float, digits: int = 6) -> float:
-    import decimal
-
-    return float(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1).scaleb(-digits),
-            rounding=decimal.ROUND_HALF_UP,
-        )
-    )
 
 
 def _md5_bucket(s: str, n: int) -> int:

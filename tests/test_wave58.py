@@ -21,32 +21,30 @@ from readability_1_spark.queries import (
     q_promo_revenue_share,
 )
 
+from .replicas import _tbl
+
 SF = "/root/testdata/sf0.001"
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string"
 )
 
 
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
-
-
 # ------------------------------------------- Q5 local supplier volume
 
 
 def test_local_supplier_volume_replica(spark):
-    nat = {r["n_nationkey"]: r for r in _tbl("nation")}
-    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region")}
-    sup = {r["s_suppkey"]: r["s_nationkey"] for r in _tbl("supplier")}
-    cust = {r["c_custkey"]: r["c_nationkey"] for r in _tbl("customer")}
+    nat = {r["n_nationkey"]: r for r in _tbl("nation", SF)}
+    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region", SF)}
+    sup = {r["s_suppkey"]: r["s_nationkey"] for r in _tbl("supplier", SF)}
+    cust = {r["c_custkey"]: r["c_nationkey"] for r in _tbl("customer", SF)}
     orders = {
         r["o_orderkey"]: r["o_custkey"]
-        for r in _tbl("orders")
+        for r in _tbl("orders", SF)
         if "1996-01-01" <= r["o_orderdate"].strftime("%Y-%m-%d") < "1997-01-01"
     }
     want_rev = defaultdict(float)
     want_n = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         ck = orders.get(li["l_orderkey"])
         if ck is None:
             continue
@@ -119,10 +117,10 @@ def test_local_supplier_volume_crafted(spark, tmp_path):
 
 
 def test_promo_revenue_share_replica(spark):
-    ptype = {r["p_partkey"]: r["p_type"] for r in _tbl("part")}
+    ptype = {r["p_partkey"]: r["p_type"] for r in _tbl("part", SF)}
     promo = defaultdict(float)
     total = defaultdict(float)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         d = li["l_shipdate"]
         if not ("1996-01-01" <= d.strftime("%Y-%m-%d") < "1997-01-01"):
             continue

@@ -10,8 +10,6 @@ file pinning every malformed class."""
 import json
 from collections import defaultdict
 
-import pyarrow.parquet as pq
-
 from readability_1_spark.queries import (
     TRANSCRIPTS_JSONL,
     jsonl_ingest_stats_frame,
@@ -20,24 +18,22 @@ from readability_1_spark.queries import (
     q_volume_shipping_pairs,
 )
 
+from .replicas import _tbl
+
 SF = "/root/testdata/sf0.001"
-
-
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
 
 
 # --------------------------------------------- Q7 volume shipping
 
 
 def test_volume_shipping_pairs_replica(spark):
-    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation")}
-    sup = {r["s_suppkey"]: nat[r["s_nationkey"]] for r in _tbl("supplier")}
-    cust = {r["c_custkey"]: nat[r["c_nationkey"]] for r in _tbl("customer")}
-    ocust = {r["o_orderkey"]: r["o_custkey"] for r in _tbl("orders")}
+    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation", SF)}
+    sup = {r["s_suppkey"]: nat[r["s_nationkey"]] for r in _tbl("supplier", SF)}
+    cust = {r["c_custkey"]: nat[r["c_nationkey"]] for r in _tbl("customer", SF)}
+    ocust = {r["o_orderkey"]: r["o_custkey"] for r in _tbl("orders", SF)}
     want_rev = defaultdict(float)
     want_n = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         d = li["l_shipdate"].strftime("%Y-%m-%d")
         if not ("1996-01-01" <= d < "1998-01-01"):
             continue
@@ -70,12 +66,12 @@ def test_volume_shipping_pairs_replica(spark):
 
 
 def test_returned_item_revenue_replica(spark):
-    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation")}
-    cust = {r["c_custkey"]: r for r in _tbl("customer")}
-    orders = {r["o_orderkey"]: r["o_custkey"] for r in _tbl("orders")}
+    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation", SF)}
+    cust = {r["c_custkey"]: r for r in _tbl("customer", SF)}
+    orders = {r["o_orderkey"]: r["o_custkey"] for r in _tbl("orders", SF)}
     rev = defaultdict(float)
     n_items = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         if li["l_returnflag"] != "R":
             continue
         ck = orders[li["l_orderkey"]]

@@ -7,41 +7,37 @@ branch-exclusivity proof for the disjunctive query."""
 
 from collections import defaultdict
 
-import pyarrow.parquet as pq
-
 from readability_1_spark.queries import (
     q_disjunctive_part_revenue,
     q_forecast_revenue_change,
     q_nation_market_share,
 )
 
+from .replicas import _tbl
+
 SF = "/root/testdata/sf0.001"
-
-
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
 
 
 # ------------------------------------------------ Q8 market share
 
 
 def test_nation_market_share_replica(spark):
-    nat = {r["n_nationkey"]: r for r in _tbl("nation")}
-    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region")}
-    cust = {r["c_custkey"]: r["c_nationkey"] for r in _tbl("customer")}
+    nat = {r["n_nationkey"]: r for r in _tbl("nation", SF)}
+    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region", SF)}
+    cust = {r["c_custkey"]: r["c_nationkey"] for r in _tbl("customer", SF)}
     econ_parts = {
-        r["p_partkey"] for r in _tbl("part") if r["p_type"] == "ECONOMY"
+        r["p_partkey"] for r in _tbl("part", SF) if r["p_type"] == "ECONOMY"
     }
-    sup_nat = {r["s_suppkey"]: r["s_nationkey"] for r in _tbl("supplier")}
+    sup_nat = {r["s_suppkey"]: r["s_nationkey"] for r in _tbl("supplier", SF)}
     orders = {
         r["o_orderkey"]: r
-        for r in _tbl("orders")
+        for r in _tbl("orders", SF)
         if "1996-01-01" <= r["o_orderdate"].strftime("%Y-%m-%d") < "1998-01-01"
     }
     tot = defaultdict(float)
     target = defaultdict(float)
     n = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         o = orders.get(li["l_orderkey"])
         if o is None or li["l_partkey"] not in econ_parts:
             continue
@@ -79,10 +75,10 @@ _BRANCHES = [
 
 
 def test_disjunctive_part_revenue_replica(spark):
-    parts = {r["p_partkey"]: r for r in _tbl("part")}
+    parts = {r["p_partkey"]: r for r in _tbl("part", SF)}
     rev = defaultdict(float)
     n = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         p = parts[li["l_partkey"]]
         q = li["l_quantity"]
         hits = [
@@ -111,7 +107,7 @@ def test_disjunctive_part_revenue_replica(spark):
 def test_forecast_revenue_change_replica(spark):
     want = 0.0
     cnt = 0
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         d = li["l_shipdate"].strftime("%Y-%m-%d")
         if not ("1996-01-01" <= d < "1997-01-01"):
             continue

@@ -9,7 +9,6 @@ uses) and a full hashlib replica of the MinHash banding pipeline."""
 
 import hashlib
 import math
-import re
 from collections import defaultdict
 
 import pyarrow.parquet as pq
@@ -22,15 +21,13 @@ from readability_1_spark.queries import (
     q_source_concentration,
 )
 
+from .replicas import _toks
+
 SF = "/root/testdata/sf0.001"
 
 
 def _docs():
     return pq.read_table(f"{SF}/documents.parquet").to_pylist()
-
-
-def _toks(text):
-    return [w for w in re.split(r"[^a-z0-9]+", text.lower()) if w]
 
 
 # ------------------------------------------------ source concentration

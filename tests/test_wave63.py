@@ -10,8 +10,6 @@ from collections import defaultdict
 from datetime import datetime
 from decimal import ROUND_HALF_UP, Decimal
 
-import pyarrow.parquet as pq
-
 from readability_1_spark.queries import (
     MINCOST_MAX_SIZE,
     MINCOST_PART_TYPE,
@@ -25,19 +23,9 @@ from readability_1_spark.queries import (
     q_shipment_priority_classes,
 )
 
+from .replicas import _round6, _tbl
+
 SF = "/root/testdata/sf0.001"
-
-
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
-
-
-def _round6(x):
-    # Spark F.round on DOUBLE rounds the shortest-repr decimal HALF_UP
-    # (BigDecimal.valueOf) — model it with Decimal(repr(x)).
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _round2(x):
@@ -48,9 +36,9 @@ def _round2(x):
 
 
 def test_min_cost_supplier_replica(spark):
-    nat = {r["n_nationkey"]: r for r in _tbl("nation")}
-    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region")}
-    sup = {r["s_suppkey"]: r for r in _tbl("supplier")}
+    nat = {r["n_nationkey"]: r for r in _tbl("nation", SF)}
+    reg = {r["r_regionkey"]: r["r_name"] for r in _tbl("region", SF)}
+    sup = {r["s_suppkey"]: r for r in _tbl("supplier", SF)}
     in_region = {
         k
         for k, s in sup.items()
@@ -58,12 +46,12 @@ def test_min_cost_supplier_replica(spark):
     }
     part = {
         r["p_partkey"]: r
-        for r in _tbl("part")
+        for r in _tbl("part", SF)
         if r["p_type"] == MINCOST_PART_TYPE
         and r["p_size"] <= MINCOST_MAX_SIZE
     }
     offers = {}
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         pk, sk = li["l_partkey"], li["l_suppkey"]
         if pk not in part or sk not in in_region:
             continue
@@ -140,14 +128,14 @@ def test_min_cost_supplier_crafted(spark, tmp_path):
 def test_product_type_profit_replica_exact(spark):
     retail = {
         r["p_partkey"]: round(r["p_retailprice"] * 100)
-        for r in _tbl("part")
+        for r in _tbl("part", SF)
         if r["p_type"] == PROFIT_PART_TYPE
     }
-    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation")}
-    sup = {r["s_suppkey"]: nat[r["s_nationkey"]] for r in _tbl("supplier")}
-    oyear = {r["o_orderkey"]: r["o_orderdate"].year for r in _tbl("orders")}
+    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation", SF)}
+    sup = {r["s_suppkey"]: nat[r["s_nationkey"]] for r in _tbl("supplier", SF)}
+    oyear = {r["o_orderkey"]: r["o_orderdate"].year for r in _tbl("orders", SF)}
     want = defaultdict(lambda: [0, 0])
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         rc = retail.get(li["l_partkey"])
         if rc is None:
             continue
@@ -177,10 +165,10 @@ def test_shipment_priority_classes_replica(spark):
     hi = f"{SLOW_SHIP_YEAR + 1}-01-01"
     orders = {
         r["o_orderkey"]: (r["o_orderdate"], r["o_orderpriority"])
-        for r in _tbl("orders")
+        for r in _tbl("orders", SF)
     }
     want = defaultdict(lambda: [0, 0])
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         sd = li["l_shipdate"]
         if not (lo <= sd.strftime("%Y-%m-%d") < hi):
             continue

@@ -11,8 +11,6 @@ from collections import defaultdict
 from datetime import datetime
 from decimal import ROUND_HALF_UP, Decimal
 
-import pyarrow.parquet as pq
-
 from readability_1_spark.queries import (
     EXCESS_STOCK_DENOM,
     EXCESS_STOCK_YEAR,
@@ -25,17 +23,9 @@ from readability_1_spark.queries import (
     q_supplier_part_counts,
 )
 
+from .replicas import _round6, _tbl
+
 SF = "/root/testdata/sf0.001"
-
-
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _round2(x):
@@ -49,11 +39,11 @@ def test_important_part_stock_replica(spark):
     lo, hi = IMPORTANT_STOCK_NATION_RANGE
     in_window = {
         r["s_suppkey"]
-        for r in _tbl("supplier")
+        for r in _tbl("supplier", SF)
         if lo <= r["s_nationkey"] < hi
     }
     val = defaultdict(lambda: [0, 0])
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         if li["l_suppkey"] not in in_window:
             continue
         g = val[li["l_partkey"]]
@@ -96,15 +86,15 @@ def test_important_part_stock_boundary_crafted(spark, tmp_path):
 
 
 def test_supplier_part_counts_replica(spark):
-    bad = {r["s_suppkey"] for r in _tbl("supplier") if r["s_acctbal"] < 0}
+    bad = {r["s_suppkey"] for r in _tbl("supplier", SF) if r["s_acctbal"] < 0}
     attrs = {
         r["p_partkey"]: (r["p_brand"], r["p_type"], r["p_size"])
-        for r in _tbl("part")
+        for r in _tbl("part", SF)
         if r["p_brand"] != PARTCOUNT_EXCL_BRAND
         and r["p_type"] != PARTCOUNT_EXCL_TYPE
     }
     sups = defaultdict(set)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         if li["l_suppkey"] in bad:
             continue
         a = attrs.get(li["l_partkey"])
@@ -151,7 +141,7 @@ def test_excess_stock_suppliers_replica(spark):
     lo = f"{EXCESS_STOCK_YEAR}-01-01"
     hi = f"{EXCESS_STOCK_YEAR + 1}-01-01"
     per_ps = defaultdict(int)
-    for li in _tbl("lineitem"):
+    for li in _tbl("lineitem", SF):
         if lo <= li["l_shipdate"].strftime("%Y-%m-%d") < hi:
             per_ps[(li["l_partkey"], li["l_suppkey"])] += round(
                 li["l_quantity"]
@@ -164,8 +154,8 @@ def test_excess_stock_suppliers_replica(spark):
         if q * EXCESS_STOCK_DENOM > per_part[pk]:
             want[sk][0] += 1
             want[sk][1] += q
-    sup = {r["s_suppkey"]: r for r in _tbl("supplier")}
-    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation")}
+    sup = {r["s_suppkey"]: r for r in _tbl("supplier", SF)}
+    nat = {r["n_nationkey"]: r["n_name"] for r in _tbl("nation", SF)}
     rows = q_excess_stock_suppliers(spark, SF).collect()
     got = {r["s_suppkey"]: r for r in rows}
     assert set(got) == set(want) and want

@@ -8,11 +8,7 @@ integer-exact spectrum replica, and a crafted star schema with planted
 orphans (including the NULL-FK case)."""
 
 import hashlib
-import re
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
-
-import pyarrow.parquet as pq
 
 from readability_1_spark.queries import (
     BACKOFF_ALPHA,
@@ -25,15 +21,9 @@ from readability_1_spark.queries import (
     q_trigram_backoff_score,
 )
 
+from .replicas import _round6, _tbl, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _tbl(name, sf=SF):
-    return pq.read_table(f"{sf}/{name}.parquet").to_pylist()
-
-
-def _toks(text):
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
 
 def _split_of(doc_id) -> str:
@@ -45,12 +35,6 @@ def _split_of(doc_id) -> str:
     if b < SPLIT_TRAIN_LT:
         return "train"
     return "val" if b < SPLIT_VAL_LT else "test"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # ------------------------------------------ trigram backoff LM replica
@@ -109,7 +93,7 @@ def _backoff_replica(docs):
 
 
 def test_trigram_backoff_replica_real_corpus(spark):
-    docs = [(r["doc_id"], r["text"]) for r in _tbl("documents")]
+    docs = [(r["doc_id"], r["text"]) for r in _tbl("documents", SF)]
     want, branches = _backoff_replica(docs)
     rows = q_trigram_backoff_score(spark, SF).collect()
     got = {
@@ -172,7 +156,7 @@ def test_trigram_backoff_short_doc_coverage(spark, tmp_path):
 
 def test_shingle_df_spectrum_replica(spark):
     per_doc = defaultdict(set)
-    for r in _tbl("documents"):
+    for r in _tbl("documents", SF):
         ws = _toks(r["text"])
         for i in range(len(ws) - 2):
             per_doc[" ".join(ws[i : i + 3])].add(r["doc_id"])
@@ -198,7 +182,7 @@ def test_shingle_df_spectrum_replica(spark):
 def test_referential_integrity_real_tables_intact(spark):
     rows = q_referential_integrity_audit(spark, SF).collect()
     assert len(rows) == len(RI_RELATIONS)
-    sizes = {t: len(_tbl(t)) for t in
+    sizes = {t: len(_tbl(t, SF)) for t in
              {c for c, _, _, _ in RI_RELATIONS}}
     for r in rows:
         child = r["relation"].split(".")[0]

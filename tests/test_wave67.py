@@ -26,23 +26,9 @@ from readability_1_spark.queries import (
     robots_meta_frame,
 )
 
+from .replicas import _round6, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text):
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
-
-
-def _round6(x):
-    # integer-quotient round-6: Spark and DuckDB agree (CLAUDE.md);
-    # Python round() is half-even but these quotients never sit on a
-    # .5e-6 boundary except at exactly representable halves, where
-    # banker's rounding could differ — use the repr-decimal recipe.
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # --------------------------------------------------- rouge overlap

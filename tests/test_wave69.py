@@ -8,7 +8,6 @@ with the inclusion-exclusion identity and a crafted known-overlap
 corpus; and a timestamp-delta replica of the runtime rollup."""
 
 import hashlib
-import re
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -23,11 +22,9 @@ from readability_1_spark.queries import (
     q_tool_runtime_stats,
 )
 
+from .replicas import _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _toks(text):
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
 
 def _poly(key: str) -> int:

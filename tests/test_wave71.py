@@ -9,8 +9,6 @@ DOCUMENTS the audit's finding (the linear quality model is ~a length
 proxy on this corpus, r > 0.9)."""
 
 import hashlib
-import re
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -25,17 +23,9 @@ from readability_1_spark.queries import (
     q_split_balance_audit,
 )
 
+from .replicas import _round6, _toks
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
-
-
-def _toks(text):
-    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
 
 
 def _shingle_set(text):

@@ -25,13 +25,9 @@ from readability_1_spark.queries import (
     q_event_dow_seasonality,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _round0(x):

@@ -10,7 +10,6 @@ including the replay = sum((n-i) * tok_i) closed form."""
 import hashlib
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -24,13 +23,9 @@ from readability_1_spark.queries import (
     q_minhash_band_occupancy,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # --------------------------------------------------- language confusion

@@ -12,7 +12,6 @@ vs adversarially striped layout; constant/unique column extremes)."""
 
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -28,13 +27,9 @@ from readability_1_spark.queries import (
     q_zonemap_pruning_estimate,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _varint(g):

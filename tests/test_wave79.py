@@ -13,7 +13,6 @@ import datetime
 import hashlib
 import math
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -28,13 +27,9 @@ from readability_1_spark.queries import (
     q_shard_integrity_manifest,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # --------------------------------------------------- shard manifest

@@ -12,7 +12,6 @@ lists match)."""
 import math
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -31,14 +30,10 @@ from readability_1_spark.queries import (
     q_url_template_mining,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
 HREF_RE = r'<a[ \t][^>]*href="([^"]*)"'
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _decode(x):

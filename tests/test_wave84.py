@@ -10,7 +10,6 @@ attested cluster assignments."""
 
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -29,13 +28,9 @@ from readability_1_spark.queries import (
     q_host_seeded_pagerank,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _host_graph(spark):

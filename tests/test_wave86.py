@@ -9,7 +9,6 @@ does not."""
 
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -23,13 +22,9 @@ from readability_1_spark.queries import (
     q_source_trimmed_stats,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # --------------------------------------------------- phrase search

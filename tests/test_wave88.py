@@ -24,13 +24,9 @@ from readability_1_spark.queries import (
     q_filter_cohen_kappa,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 # --------------------------------------------------- kappa

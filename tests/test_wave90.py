@@ -24,13 +24,9 @@ from readability_1_spark.queries import (
     q_training_shuffle_plan,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _r0(x):

@@ -11,7 +11,6 @@ replica."""
 import math
 import re
 from collections import defaultdict
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 
@@ -26,13 +25,9 @@ from readability_1_spark.queries import (
     q_source_vocab_overlap,
 )
 
+from .replicas import _round6
+
 SF = "/root/testdata/sf0.001"
-
-
-def _round6(x):
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _cos(a, b):

@@ -39,10 +39,9 @@ def main() -> None:
     sections = []
 
     # Extraction pipeline over a parquet transcripts table.
-    from readability_1_spark.queries import TRANSCRIPTS_PQ
+    from readability_1_spark.queries import _transcripts_table
 
-    transcripts = spark.read.parquet(TRANSCRIPTS_PQ)
-    ex = extract_transcripts(transcripts, num_parts=16)
+    ex = extract_transcripts(_transcripts_table(spark), num_parts=16)
     sections.append(("extraction pipeline (scan → pushed gate → salt shuffle "
                      "→ mapInArrow kernel)", plan_of(ex)))
 

@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from readability_1_spark.queries import TOKEN_SPLIT, hll_estimate  # noqa: E402
+from readability_1_spark.queries import _words, hll_estimate  # noqa: E402
 from readability_1_spark.session import get_spark  # noqa: E402
 
 
@@ -31,10 +31,8 @@ def main() -> None:
     cases = []
     for sf_dir in sf_dirs:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        ws = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
-                      lambda x: x != "")
         pairs = (
-            docs.select("doc_id", F.explode(ws).alias("tok"))
+            docs.select("doc_id", F.explode(_words("text")).alias("tok"))
             .select(
                 F.concat(
                     F.col("tok"), F.lit("#"), F.col("doc_id").cast("string")

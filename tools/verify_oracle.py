@@ -75,10 +75,19 @@ def main():
     for name in names:
         fn, sql = QUERIES[name]
         t0 = time.time()
+        sdf = None
         try:
-            sdf = fn(spark, SF_DIR)
+            # Persisted so that the dtype check's toPandas() reads the
+            # collected rows instead of running the query a second time.
+            sdf = fn(spark, SF_DIR).persist()
             srows = sdf.collect()
             scols = sdf.columns
+            pdf = None
+            if sql is not None:
+                try:
+                    pdf = sdf.toPandas()
+                except Exception:
+                    pass
         except Exception as e:
             failures.append((name, f"spark error: {e}"))
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
@@ -88,6 +97,9 @@ def main():
                 "err": f"spark error: {str(e)[:300]}",
             }
             continue
+        finally:
+            if sdf is not None:
+                sdf.unpersist()
         t1 = time.time()
         if sql is None:
             print(f"ok?  {name}: rows-only ({len(srows)} rows, {t1-t0:.1f}s)")
@@ -118,7 +130,6 @@ def main():
         # Flag any column whose pandas dtype *kind* differs between engines.
         try:
             ddf = con.execute(sql).df()
-            pdf = sdf.toPandas()
             for c in set(ddf.columns) & set(pdf.columns):
                 dk = ddf[c].dtype.kind
                 pk = pdf[c].dtype.kind
