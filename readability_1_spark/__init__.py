@@ -5,7 +5,7 @@ Architecture (SURVEY.md):
   kernel, matching /root/reference (JSDOMParser.js + Readability.js +
   Readability-readerable.js) output exactly.
 * ``kernel``: Arrow-batch wrapper exposing the kernel to ``mapInArrow``.
-* ``pipeline``: the distributed pipeline — HTML gating, salting/skew
+* ``pipeline``: the distributed pipeline — HTML gating, per-turn hash shuffle/skew
   handling, extraction, lineage + metrics, checkpoint/resume.
 * ``transcripts``: deterministic synthetic transcript-table builders.
 * ``queries``: pipeline-level analytic operators with SQL oracles.

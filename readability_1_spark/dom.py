@@ -312,24 +312,6 @@ def has_descendant_tag(node: "Element | Document", tags: frozenset) -> bool:
     return rec(node.children)
 
 
-def count_descendant_tags(node: "Element | Document", tags: frozenset) -> int:
-    """Total count of descendant elements with tagName in `tags`
-    (uppercase) — equals sum(len(getElementsByTagName(t))) in one walk."""
-    n = 0
-
-    def rec(children):
-        nonlocal n
-        for child in children:
-            if child.tagName in tags:
-                n += 1
-            kids = child.children
-            if kids:
-                rec(kids)
-
-    rec(node.children)
-    return n
-
-
 def _get_elements_by_tag_name(node: "Element | Document", tag: str) -> list["Element"]:
     # JSDOMParser.js:299-315 — pre-order over element-only children; returns
     # a plain (non-live) list.  Iterative: no recursion-depth limits.

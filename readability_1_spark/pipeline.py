@@ -4,8 +4,8 @@ Physical plan:
 
     scan(transcripts)                      Catalyst prunes to needed columns
     → filter(text likely-HTML)            pushed to the scan
-    → project(+ part_id, salt)            deterministic lineage partition id
-    → repartition(N, salt)                explicit shuffle: skew-spreading
+    → project(+ part_id)                  deterministic lineage partition id
+    → repartition(N, conv_id, turn_idx)   explicit shuffle: skew-spreading
     → mapInArrow(extraction kernel)       Arrow batches, JVM↔Python boundary
     → (a) extractions sink
       (b) groupBy(part_id) lineage/metrics rollup    partial agg map-side
@@ -13,10 +13,14 @@ Physical plan:
 
 Skew handling: HTML size and retry-ladder cost vary ~2000× per document
 (reference bench _dev/bench1.csv: 84…15284 op/s), and conv_id row counts are
-skewed.  The salt is a hash of (conv_id, turn_idx) — NOT conv_id alone — so
-one huge conversation spreads across all partitions while part_id stays
-deterministic for resume.  At 10^12 turns the same plan holds: the shuffle
-is pure hash-scatter (no co-location requirement downstream), so partition
+skewed.  The shuffle hashes each turn's (conv_id, turn_idx) — NOT conv_id
+alone — so one huge conversation spreads across all partitions while
+part_id stays deterministic for resume.  It hashes those columns directly:
+`repartition(n, c)` hashes `c` again, so shuffling on a precomputed
+`pmod(hash, n)` bucket would fold n values into fewer partitions (on a
+112-turn input, 10 of 16 partitions and 34 of 64, where hashing the turns
+fills 16 and 52).  At 10^12 turns the same plan holds: the shuffle is
+pure hash-scatter (no co-location requirement downstream), so partition
 count scales with cluster size, and AQE coalesces the post-kernel stage.
 
 Storage: Iceberg `writeTo(...).append()` when a catalog is configured (the
@@ -26,11 +30,13 @@ appends — both give atomic per-partition visibility for resume.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from .kernel import OUT_SCHEMA_DDL, make_extraction_kernel
 
@@ -110,18 +116,14 @@ def gate_html_turns(df: DataFrame) -> DataFrame:
 
 
 def with_partitioning(df: DataFrame, num_parts: int) -> DataFrame:
-    """Deterministic lineage partition id + per-turn salt.
+    """Deterministic lineage partition id.
 
     part_id = pmod(xxhash64(conv_id), P): stable across runs → resume key.
-    salt    = pmod(xxhash64(conv_id, turn_idx), P): spreads hot conv_ids.
+    The kernel shuffle spreads hot conv_ids by hashing (conv_id, turn_idx)
+    itself (`extract_transcripts`), so there is no per-turn salt column.
     """
-    return (
-        df.withColumn(
-            "part_id", F.pmod(F.xxhash64("conv_id"), F.lit(num_parts)).cast("int")
-        )
-        .withColumn(
-            "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(num_parts)).cast("int")
-        )
+    return df.withColumn(
+        "part_id", F.pmod(F.xxhash64("conv_id"), F.lit(num_parts)).cast("int")
     )
 
 
@@ -161,20 +163,20 @@ def extract_transcripts(
                 F.pmod(F.xxhash64("payload_hash"), F.lit(num_parts)).cast("int"),
             )
         )
-        shuffle_key = "part_id"
+        shuffle_keys = ["payload_hash"]
     else:
-        todo, shuffle_key = parted.select(*cols, "salt"), "salt"
+        todo, shuffle_keys = parted.select(*cols), ["conv_id", "turn_idx"]
     if repartition:
-        # One hash shuffle on the per-turn salt: spreads hot conversations
-        # AND heterogeneous page sizes uniformly.  A size-bucketing variant
-        # (sortWithinPartitions(length(text)) after the shuffle, for
-        # homogeneous-cost Arrow batches) was measured at local[32]/30k
-        # turns and is a small net LOSS (median 671 t/s desc / 657 asc vs
-        # 697 unsorted): with 4x task oversubscription the scheduler
-        # already absorbs the straggler tail, so the sort pays its copy
-        # cost without a win.  Oversubscription (num_parts >= 4x cores) is
-        # the lever that matters.
-        todo = todo.repartition(num_parts, shuffle_key)
+        # One hash shuffle per turn (per payload under dedup): spreads hot
+        # conversations AND heterogeneous page sizes uniformly.  A size-
+        # bucketing variant (sortWithinPartitions(length(text)) after the
+        # shuffle, for homogeneous-cost Arrow batches) was measured at
+        # local[32]/30k turns and is a small net LOSS (median 671 t/s desc /
+        # 657 asc vs 697 unsorted): with 4x task oversubscription the scheduler
+        # already absorbs the straggler tail, so the sort pays its copy cost
+        # without a win.  Oversubscription (num_parts >= 4x cores) is the lever
+        # that matters.
+        todo = todo.repartition(num_parts, *shuffle_keys)
     extracted = todo.select(*cols).mapInArrow(
         make_extraction_kernel(readerable_gate=readerable_gate), OUT_SCHEMA_DDL
     )
@@ -210,12 +212,15 @@ def lineage_rollup(extractions: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-# The checkpoint manifest's shape.  Reading it with this schema skips the
-# Spark job parquet runs to infer one from the file footers.
-CHECKPOINTS_DDL = (
-    "run_id STRING, batch_id STRING, part_id INT, rows_written BIGINT, "
-    "committed_at TIMESTAMP"
-)
+# The stored tables' shapes.  Reading a table with its schema skips the
+# Spark job parquet runs to infer one from the file footers, and pins the
+# partition columns as STRING: inferred, an all-digit batch_id would read
+# back as BIGINT.  `_MANIFEST_DDL` is a checkpoint row as
+# `run_extraction_job` builds it; the append stamps committed_at.
+_MANIFEST_DDL = "run_id STRING, batch_id STRING, part_id INT, rows_written BIGINT"
+CHECKPOINTS_DDL = _MANIFEST_DDL + ", committed_at TIMESTAMP"
+EXTRACTIONS_DDL = OUT_SCHEMA_DDL + ", run_id STRING, batch_id STRING"
+_TABLE_DDL = {"checkpoints": CHECKPOINTS_DDL, "extractions": EXTRACTIONS_DDL}
 
 
 class Storage:
@@ -245,8 +250,8 @@ class Storage:
         if not os.path.exists(path):
             return None
         reader = self.spark.read
-        if name == "checkpoints":
-            reader = reader.schema(CHECKPOINTS_DDL)
+        if name in _TABLE_DDL:
+            reader = reader.schema(_TABLE_DDL[name])
         try:
             return reader.parquet(path)
         except Exception:
@@ -267,14 +272,16 @@ def run_extraction_job(
       1. todo = all part_ids ∖ checkpointed part_ids (left-anti join); an
          empty todo returns at once with rows = 0 and writes nothing.  The
          collected ids come back as a JVM-local frame (range ∩ todo), so
-         the semi-join and manifest below start no Python task
+         the semi-join below starts no Python task
       2. extract only rows whose part_id ∈ todo and append them (run_id-
          partitioned) — the kernel runs exactly ONCE, with no persist() of
          the full output and no extra count() pass (at 10^12 turns caching
          every extracted document is a memory/disk-pressure risk)
-      3. derive lineage + the checkpoint manifest by reading back only the
-         just-written run partition, column-pruned to the tiny metric
-         columns (status/part_id/parse_ms/…) — content is never re-read
+      3. scan the just-written batch once, column-pruned to the tiny metric
+         columns (status/part_id/parse_ms/…) — content is never re-read —
+         into one per-partition rollup collected to the driver (<= num_parts
+         rows); it feeds the lineage append, the manifest's rows_written
+         and the returned row count
       4. the manifest covers EVERY todo partition (rows_written = 0 for
          partitions fully consumed by the gates), so a gated-out partition
          checkpoints too and is not re-extracted on resume.
@@ -300,7 +307,7 @@ def run_extraction_job(
     # Materialize the (<= num_parts rows) todo set once: it feeds both the
     # semi-join build side and the manifest, and leaving it lazy would scan
     # the gated input twice just to recompute the same tiny distinct.
-    todo_ids = [r.part_id for r in todo_parts.distinct().collect()]
+    todo_ids = sorted(r.part_id for r in todo_parts.distinct().collect())
     if not todo_ids:
         return {"run_id": run_id, "batch_id": batch_id, "rows": 0}
     # Built JVM-side: a driver-list createDataFrame is a Python RDD scan,
@@ -321,37 +328,38 @@ def run_extraction_job(
 
     # Read back ONLY this batch's partition (directory-pruned), column-pruned
     # to the metric columns — a tiny scan compared to the content payload.
+    stats: list = []
     all_written = storage.read("extractions")
-    written = (
-        all_written.filter(
+    if all_written is not None:
+        written = all_written.filter(
             (F.col("run_id") == run_id) & (F.col("batch_id") == batch_id)
         ).drop("run_id", "batch_id")
-        if all_written is not None
-        else None
-    )
-    if written is not None:
-        lineage = lineage_rollup(written, run_id)
-        storage.append(lineage, "lineage")
-        counts = written.groupBy("part_id").agg(
-            F.count(F.lit(1)).alias("rows_written")
-        )
-    else:  # nothing extracted at all this run (all rows gated out)
-        counts = None
-    manifest = todo_parts
-    if counts is not None:
-        manifest = manifest.join(counts, "part_id", "left")
-    else:
-        manifest = manifest.withColumn("rows_written", F.lit(None).cast("long"))
-    manifest = (
-        manifest.withColumn("rows_written", F.coalesce(F.col("rows_written"), F.lit(0)))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("batch_id", F.lit(batch_id))
-        .withColumn("committed_at", F.current_timestamp())
-        .select("run_id", "batch_id", "part_id", "rows_written", "committed_at")
-    )
+        rollup = lineage_rollup(written, run_id).drop("completed_at")
+        stats = rollup.collect()
+    if stats:  # else nothing extracted this batch (all rows gated out)
+        lineage = _local_frame(spark, stats, rollup.schema)
+        storage.append(lineage.withColumn("completed_at", F.current_timestamp()), "lineage")
+    rows_written = {r.part_id: r.input_rows for r in stats}
+    manifest = _local_frame(
+        spark,
+        [(run_id, batch_id, p, rows_written.get(p, 0)) for p in todo_ids],
+        StructType.fromDDL(_MANIFEST_DDL),
+    ).withColumn("committed_at", F.current_timestamp())
     storage.append(manifest, "checkpoints")
-    n_rows = written.count() if written is not None else 0
-    return {"run_id": run_id, "batch_id": batch_id, "rows": n_rows}
+    return {"run_id": run_id, "batch_id": batch_id, "rows": sum(rows_written.values())}
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """`rows` (tuples in `schema`'s field order) as a frame Spark plans
+    JVM-side, from one JSON literal: a driver-list createDataFrame is a
+    Python RDD scan, every job over it starting Python tasks to unpickle
+    the rows, and a literal Column per value costs a py4j round trip each.
+    JSON carries each double as its shortest repr, which parses back to
+    the same double."""
+    payload = json.dumps([dict(zip(schema.fieldNames(), row)) for row in rows])
+    return spark.range(1).select(
+        F.inline(F.from_json(F.lit(payload), ArrayType(schema), {"mode": "FAILFAST"}))
+    )
 
 
 def _latest_per_turn(extractions: DataFrame) -> DataFrame:

@@ -10,7 +10,8 @@ Fork-specific quirks intentionally reproduced (SURVEY.md §2.9):
   backwards (Readability.js:305-316);
 * the `el.tagName === "object"` comparisons in `_clean`/`_cleanConditionally`
   (Readability.js:1842, 2110) never match because tagName is uppercase — the
-  innerHTML video check is dead code and stays dead here;
+  innerHTML video check is dead code (kept in `_clean`, left out of
+  `_clean_conditionally`, whose embed facts are counted in one walk);
 * JS float64 arithmetic (division by zero → Infinity/NaN) in the h2-vs-title
   ratio (Readability.js:750-762).
 """
@@ -28,30 +29,13 @@ from .dom import (
     Node,
     ParseFatal,
     Text,
-    count_descendant_tags,
     has_descendant_tag,
 )
 from .jsquirks import JS_WS, WS as _WS
 from .jsquirks import js_div, js_split_ws, js_trim, word_count
+from .whatwg_url import url_resolve
 
 _WS_ANY_RE = _re.compile(_WS)
-
-
-def _has_nonws_text(node: Node) -> bool:
-    """True iff any descendant text node contains a non-JS-whitespace char
-    (== `textContent.trim() != ""`), with early exit."""
-    stack = node.childNodes[::-1]
-    while stack:
-        child = stack.pop()
-        if child.node_type == 3:
-            if child.textContent.strip(JS_WS):
-                return True
-        else:
-            kids = child.childNodes
-            if kids:
-                stack.extend(kids[::-1])
-    return False
-from .whatwg_url import url_resolve
 
 FLAG_STRIP_UNLIKELYS = 0x1
 FLAG_WEIGHT_CLASSES = 0x2
@@ -104,6 +88,108 @@ _TABLE_ONLY = frozenset(("TABLE",))
 _IMG_PICTURE = frozenset(("IMG", "PICTURE"))
 
 
+# The tags `_grab_article` drops when they are without content.
+_CONTENT_CHECKED = frozenset(
+    ("DIV", "SECTION", "HEADER", "H1", "H2", "H3", "H4", "H5", "H6")
+)
+
+
+def _elements_without_content(root: Node) -> set:
+    """The `_CONTENT_CHECKED` elements under `root` (itself included) for
+    which `Readability._is_element_without_content` holds, from one
+    bottom-up pass: no non-whitespace text below, and no children or only
+    BR/HR descendants as children."""
+    out: set = set()
+
+    def rec(el) -> tuple[bool, int]:
+        # (any non-whitespace text below, BR/HR descendants)
+        has_text = False
+        n_br_hr = 0
+        for child in el.childNodes:
+            if child.node_type == TEXT_NODE:
+                if not has_text and child.textContent.strip(JS_WS):
+                    has_text = True
+            else:
+                child_text, child_br_hr = rec(child)
+                has_text = has_text or child_text
+                n_br_hr += child_br_hr + (child.tagName in _BR_HR)
+        if not has_text and el.tagName in _CONTENT_CHECKED:
+            n_children = len(el.children)
+            if n_children == 0 or n_children == n_br_hr:
+                out.add(el)
+        return has_text, n_br_hr
+
+    rec(root)
+    return out
+
+
+# `_CandidateFacts` count slots: tagName -> index in a candidate's counts.
+_COUNTED_TAGS = {"P": 0, "IMG": 1, "LI": 2, "INPUT": 3,
+                 "OBJECT": 4, "EMBED": 4, "IFRAME": 4}
+
+
+class _CandidateFacts:
+    """One pre-order walk of `root` for a `_clean_conditionally` phase.
+
+    `nodes` are the elements tagged `tag` below `root` in document order
+    (== `getElementsByTagName`); for candidate i, `parents[i]` is the
+    index of its nearest candidate ancestor (-1 for none),
+    `in_data_table[i]` whether an ancestor is a data table, and
+    `counts[i]` / `anchors[i]` hold its own region's [P, IMG, LI, INPUT,
+    object/embed/iframe, those with a video attribute] counts and <a>
+    elements.  `tag` must not be one of the counted tags or A."""
+
+    __slots__ = ("nodes", "parents", "in_data_table", "counts", "anchors")
+
+    def __init__(self, root: Element, tag: str):
+        nodes: list[Element] = []
+        parents: list[int] = []
+        in_data_table: list[bool] = []
+        counts: list[list[int]] = []
+        anchors: list[list[Element]] = []
+        in_dt = False
+        cur: Node | None = root
+        while cur is not None:
+            if cur.tagName == "TABLE" and cur._readabilityDataTable:
+                in_dt = True
+                break
+            cur = cur.parentNode
+        counted = _COUNTED_TAGS.get
+
+        def rec(children, owner: int, in_dt: bool) -> None:
+            for el in children:
+                t = el.tagName
+                kids = el.children
+                if t == tag:
+                    i = len(nodes)
+                    nodes.append(el)
+                    parents.append(owner)
+                    in_data_table.append(in_dt)
+                    counts.append([0, 0, 0, 0, 0, 0])
+                    anchors.append([])
+                    if kids:
+                        rec(kids, i, in_dt or (t == "TABLE" and bool(el._readabilityDataTable)))
+                    continue
+                if owner >= 0:
+                    k = counted(t)
+                    if k is not None:
+                        own = counts[owner]
+                        own[k] += 1
+                        if k == 4 and any(R.VIDEOS.search(a.value) for a in el.attributes):
+                            own[5] += 1
+                    elif t == "A":
+                        anchors[owner].append(el)
+                if kids:
+                    rec(kids, owner, in_dt or (t == "TABLE" and bool(el._readabilityDataTable)))
+
+        rec(root.children, -1, in_dt)
+        self.nodes = nodes
+        self.parents = parents
+        self.in_data_table = in_data_table
+        self.counts = counts
+        self.anchors = anchors
+
+
 class NoDocumentError(Exception):
     """Readability.js:101-104 — constructor throw when doc.documentElement
     is missing (e.g. an HTML fragment without an <html> element)."""
@@ -154,6 +240,8 @@ class Readability:
         # parity; messages go to stderr (stdout stays clean for kernels).
         self._debug = bool(opts.get("debug"))
         self._attempts: list[dict] = []
+        # The elements `_grab_article`'s current attempt drops as empty.
+        self._without_content: set = set()
         self._article_dir: str | None = None
         self._article_title: str | None = None
         self._article_byline: str | None = None
@@ -261,8 +349,8 @@ class Readability:
         return js_trim(e.textContent)
 
     def _get_char_count(self, e: Element, s: str = ",") -> int:
-        # Readability.js:1731-1734
-        return len(self._get_inner_text(e).split(s)) - 1
+        # Readability.js:1731-1734 (split(s).length - 1 == occurrences of s)
+        return self._get_inner_text(e).count(s)
 
     def _get_link_density(self, el: Element) -> float:
         # Readability.js:1770-1781.  Cached per node: the value depends only
@@ -475,15 +563,11 @@ class Readability:
         )
 
     def _is_element_without_content(self, node: Element) -> bool:
-        # Readability.js:1579-1594.  `textContent.trim().length == 0` is
-        # exactly "no non-whitespace text anywhere below": use an
-        # early-exit subtree scan instead of building the concatenation.
-        if node.node_type == ELEMENT_NODE and not _has_nonws_text(node):
-            n_children = len(node.children)
-            return n_children == 0 or n_children == count_descendant_tags(
-                node, _BR_HR
-            )
-        return False
+        # Readability.js:1579-1594, read from the facts `_grab_article`
+        # builds in one bottom-up pass per attempt.  They stay exact for the
+        # whole walk: it only mutates nodes it has already visited, and a
+        # node's subtree comes after it.
+        return node in self._without_content
 
     # ----- title & metadata -------------------------------------------------
     def _get_article_title(self) -> str:
@@ -656,6 +740,7 @@ class Readability:
 
         while True:
             strip_unlikely = self._flag_is_active(FLAG_STRIP_UNLIKELYS)
+            self._without_content = _elements_without_content(doc)
             elements_to_score: list[Element] = []
             node = doc.documentElement
 
@@ -712,9 +797,7 @@ class Readability:
                         node = self._remove_and_get_next(node)
                         continue
 
-                if node.tagName in (
-                    "DIV", "SECTION", "HEADER", "H1", "H2", "H3", "H4", "H5", "H6",
-                ) and self._is_element_without_content(node):
+                if self._is_element_without_content(node):
                     node = self._remove_and_get_next(node)
                     continue
 
@@ -1202,54 +1285,37 @@ class Readability:
                     el.appendChild(img)
 
     def _clean_conditionally(self, e: Element, tag: str) -> None:
-        # Readability.js:2051-2135
+        # Readability.js:2051-2135.  The subtree facts each candidate needs
+        # (P/IMG/LI/INPUT counts, its object/embed/iframe count and whether
+        # one carries a video attribute, the text length of its <a>s, a
+        # data-table ancestor) come from one walk of `e` instead of walks
+        # per candidate.  The walk gives each candidate the counts of its
+        # own region (below it, outside nested candidates); `_remove_nodes`
+        # visits candidates in reverse document order, so each child
+        # candidate is decided before its parent and, when it stays, adds
+        # its totals to its parent's.  The text lengths of a region's <a>s
+        # are read when its candidate is decided: a removed child candidate
+        # inside an <a> has shortened that <a>'s text by then.
         if not self._flag_is_active(FLAG_CLEAN_CONDITIONALLY):
             return
         is_list = tag in ("ul", "ol")
+        facts = _CandidateFacts(e, tag.upper())
+        counts, anchors, parents = facts.counts, facts.anchors, facts.parents
+        links = [0] * len(facts.nodes)  # text length of each subtree's <a>s
 
-        def _filter(node: Element, i, lst) -> bool:
-            if (tag == "table" and is_data_table(node)) or self._has_ancestor_tag(
-                node, "table", -1, is_data_table
-            ):
+        def _drop(node: Element, i: int) -> bool:
+            if (tag == "table" and is_data_table(node)) or facts.in_data_table[i]:
                 return False
             weight = self._get_class_weight(node)
             if weight < 0:
                 return True
             if self._get_char_count(node, ",") < 10:
-                # One pre-order walk for all four counts (each equals
-                # len(getElementsByTagName(tag)) over the same subtree).
-                p = img = li_raw = input_count = 0
-                stack = node.children[::-1]
-                while stack:
-                    el = stack.pop()
-                    t = el.tagName
-                    if t == "P":
-                        p += 1
-                    elif t == "IMG":
-                        img += 1
-                    elif t == "LI":
-                        li_raw += 1
-                    elif t == "INPUT":
-                        input_count += 1
-                    kids = el.children
-                    if kids:
-                        stack.extend(reversed(kids))
+                p, img, li_raw, input_count, embed_count, videos = counts[i]
+                if videos:
+                    return False
                 li = li_raw - 100
-                embeds = self._get_all_nodes_with_tag(
-                    node, ["object", "embed", "iframe"]
-                )
-                embed_count = 0
-                for embed in embeds:
-                    for attr in embed.attributes:
-                        if R.VIDEOS.search(attr.value):
-                            return False
-                    # Dead uppercase-tagName comparison kept for parity
-                    # (Readability.js:2110).
-                    if embed.tagName == "object" and R.VIDEOS.search(embed.innerHTML):
-                        return False
-                    embed_count += 1
-                link_density = self._get_link_density(node)
                 content_length = len(self._get_inner_text(node))
+                link_density = links[i] / content_length if content_length else 0.0
                 return (
                     (img > 1 and p / img < 0.5 and not self._has_ancestor_tag(node, "figure"))
                     or (not is_list and li > p)
@@ -1267,7 +1333,18 @@ class Readability:
                 )
             return False
 
-        self._remove_nodes(self._get_all_nodes_with_tag(e, [tag]), _filter)
+        def _filter(node: Element, i, lst) -> bool:
+            for a in anchors[i]:
+                links[i] += len(self._get_inner_text(a))
+            if _drop(node, i):
+                return True
+            parent = parents[i]
+            if parent >= 0:
+                counts[parent] = [a + b for a, b in zip(counts[parent], counts[i])]
+                links[parent] += links[i]
+            return False
+
+        self._remove_nodes(facts.nodes, _filter)
 
     # ----- post-processing -------------------------------------------------------
     def _post_process_content(self, content: Element) -> None:

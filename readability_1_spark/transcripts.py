@@ -9,7 +9,7 @@ few edge cases, read from the committed smoke table
 tests/goldens/transcripts_smoke.parquet; non-HTML chatter, fragments, and
 parse-error snippets are mixed in so the pipeline's gating and status
 handling are exercised.  conv_id row counts are deliberately skewed (a few
-conversations carry many turns) to exercise the salting path.
+conversations carry many turns) to exercise the per-turn shuffle.
 
 Built Spark-side for scale: a `spark.range`-derived skeleton is joined to a
 broadcast fixture-payload dimension, so the builder itself never collects or

@@ -838,3 +838,42 @@ def test_curate_c4_and_repetition_gates(spark):
     assert rep_rows, "repetition gate killed the whole corpus"
     assert {(r.conv_id, r.turn_idx) for r in rep_rows} <= plain_keys
     assert all(r.passes_repetition for r in rep_rows)
+
+
+def test_kernel_shuffle_fills_every_partition(spark):
+    """The kernel stage hashes (conv_id, turn_idx) once: every partition
+    gets turns.  Shuffling on a precomputed pmod(hash, n) bucket hashes it
+    again and leaves partitions empty (10 of 16 filled in one benchmark
+    input)."""
+    out = extract_transcripts(smoke_table(spark), num_parts=16)
+    per_part = out.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert len(per_part) == 16, sorted(r["count"] for r in per_part)
+    assert "salt" not in with_partitioning(smoke_table(spark), 16).columns
+
+
+def test_extractions_read_schema_declared(spark, tmp_path, monkeypatch):
+    """Storage reads the extractions table with a declared schema: the
+    footer schema parquet infers for the data columns, and STRING for the
+    partition columns even when a batch_id is all digits (inference would
+    make it BIGINT)."""
+    import uuid
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    monkeypatch.setattr(
+        uuid, "uuid4", lambda: uuid.UUID("12345678-9012-4345-8789-012345678901")
+    )
+    root = str(tmp_path / "store")
+    storage = Storage(spark, root)
+    few = smoke_table(spark).filter(F.col("conv_id").startswith("conv-b"))
+    assert run_extraction_job(spark, few, storage, run_id="schema", num_parts=4)["rows"] > 0
+    inferred = spark.read.parquet(os.path.join(root, "extractions")).schema
+    assert inferred["batch_id"].dataType.simpleString() == "bigint"
+    data_cols = [f for f in inferred.fields if f.name not in ("run_id", "batch_id")]
+    expected = StructType(data_cols + [StructField("run_id", StringType()),
+                                       StructField("batch_id", StringType())])
+    assert storage.read("extractions").schema == expected
+    view = read_consistent(storage, "schema")
+    assert view.schema["batch_id"].dataType == StringType()
+    assert view.count() == gate_html_turns(few).count()
+    shutil.rmtree(root, ignore_errors=True)
